@@ -108,17 +108,22 @@ object Bench {
     * mechanically instead of adjudicating it from untouched-query
     * gauges alone. Linux-only; None elsewhere (recorded as null). */
   private def cpuTicks(): Option[(Long, Long, Long, Long)] =
-    try {
-      val cols = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat"))).linesIterator
-        .next().split("\\s+").drop(1).map(_.toLong)
-      // cpu line: user nice system idle iowait irq softirq steal ...
-      val busy = cols(0) + cols(1) + cols(2) + cols.lift(5).getOrElse(0L) +
-        cols.lift(6).getOrElse(0L)
-      val idle = cols(3) + cols.lift(4).getOrElse(0L)
-      val steal = cols.lift(7).getOrElse(0L)
-      Some((busy, idle, steal, cols.sum))
-    } catch { case _: Throwable => None }
+    try Some(parseCpuLine(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/stat"))).linesIterator.next()))
+    catch { case _: Throwable => None }
+
+  /** (busy, idle, steal, total) of one `/proc/stat` cpu line. Columns:
+    * user nice system idle iowait irq softirq steal guest guest_nice.
+    * The kernel already counts guest time inside user (and guest_nice
+    * inside nice), so the total sums the first eight columns only. */
+  private[graft] def parseCpuLine(line: String): (Long, Long, Long, Long) = {
+    val cols = line.trim.split("\\s+").drop(1).map(_.toLong)
+    val busy = cols(0) + cols(1) + cols(2) + cols.lift(5).getOrElse(0L) +
+      cols.lift(6).getOrElse(0L)
+    val idle = cols(3) + cols.lift(4).getOrElse(0L)
+    val steal = cols.lift(7).getOrElse(0L)
+    (busy, idle, steal, cols.take(8).sum)
+  }
 
   /** JSON fragment of the tick deltas between two cpuTicks() samples. */
   private def cpuDeltaJson(before: Option[(Long, Long, Long, Long)],

@@ -1,7 +1,7 @@
 package graft
 
 import scala.collection.mutable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Registry for caches an operator creates while BUILDING its plan but
   * whose lifetime must extend until the caller has materialized the
@@ -16,48 +16,39 @@ import org.apache.spark.sql.DataFrame
   * frame they are not, so release only after consumption — which is
   * exactly the runner contract.
   *
-  * CONTRACT: one operator run at a time per process. The registry is
-  * process-global, so a `releaseAll()` issued by one runner would free
-  * caches a concurrently-running operator still reads. The drivers
-  * honoring this today are Verify, Bench, and the specs — all strictly
-  * sequential. A future multi-query runner must scope releases itself
-  * (build → force → releaseAll as one critical section, or one process
-  * per query). The contract is ENFORCED, not just documented: the
-  * registry remembers which thread registered the live caches, and a
-  * `releaseAll()` (or a new registration) arriving from a DIFFERENT
-  * thread while caches are live throws IllegalStateException instead
-  * of silently freeing blocks out from under the owning operator.
+  * The registry is thread-confined: each thread has its own buffer, and
+  * `releaseAll()` frees only what the calling thread registered. A run
+  * is therefore "build → force → releaseAll on one thread", and two
+  * runners on two threads cannot free each other's caches. Every
+  * registration site in the operators runs on the caller's thread.
   */
 object CacheScope {
-  private val pending = mutable.Buffer.empty[() => Unit]
-  private var ownerThread: Long = -1L
-
-  /** Caller must hold the monitor. Binds ownership on first
-    * registration; rejects cross-thread registration while another
-    * operator's caches are live. */
-  private def noteOwner(): Unit = {
-    val t = Thread.currentThread().getId
-    if (pending.isEmpty) ownerThread = t
-    else if (ownerThread != t)
-      throw new IllegalStateException(
-        s"CacheScope: thread $t registered a cache while thread " +
-          s"$ownerThread's operator caches are still live — one operator " +
-          "run at a time per process (see CacheScope doc)")
-  }
+  private val pending = ThreadLocal.withInitial(() => mutable.Buffer.empty[() => Unit])
 
   /** Track a persisted DataFrame for deferred unpersist. */
-  def track(df: DataFrame): DataFrame = synchronized {
-    noteOwner()
-    pending += (() => df.unpersist(blocking = false))
+  def track(df: DataFrame): DataFrame = {
+    pending.get += (() => df.unpersist(blocking = false))
     df
   }
 
   /** Track an arbitrary release action (e.g. freeing a locally-
     * checkpointed generation's materialized RDD, which
     * `Dataset.unpersist` cannot reach). */
-  def defer(f: () => Unit): Unit = synchronized {
-    noteOwner()
-    pending += f
+  def defer(f: () => Unit): Unit = pending.get += f
+
+  /** Run `body` with the given session conf overrides in force, then put
+    * each key back to its earlier value (or unset it if it had none),
+    * whether `body` returns or throws. For an override that only has to
+    * hold while a plan is BUILT — e.g. around `persist()`, which fixes a
+    * cached plan's conf when it registers the cache. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Checkpoint a loop generation for lineage truncation — the shared
@@ -120,18 +111,22 @@ object CacheScope {
   def freeCheckpoint(df: DataFrame): Unit =
     org.apache.spark.sql.graft.Bridge.freeCheckpointed(df)
 
-  /** Free every tracked cache. Safe to call repeatedly from the owning
-    * thread (or any thread when nothing is live); fails fast when
-    * another thread's caches are registered. */
-  def releaseAll(): Unit = synchronized {
-    if (pending.nonEmpty && ownerThread != Thread.currentThread().getId)
-      throw new IllegalStateException(
-        s"CacheScope.releaseAll() from thread ${Thread.currentThread().getId} " +
-          s"while thread $ownerThread's operator caches are live — a " +
-          "concurrent runner must scope its own build→force→release " +
-          "critical section (see CacheScope doc)")
-    pending.foreach(f => f())
-    pending.clear()
-    ownerThread = -1L
+  /** Run and drop every action the calling thread registered. Every
+    * action runs even if an earlier one throws; the first failure is
+    * then rethrown with the others attached as suppressed. Safe to call
+    * repeatedly — a second call finds nothing to do. */
+  def releaseAll(): Unit = {
+    val actions = pending.get.toList
+    pending.remove()
+    var first: Throwable = null
+    actions.foreach { f =>
+      try f()
+      catch {
+        case e: Throwable =>
+          if (first == null) first = e
+          else if (e ne first) first.addSuppressed(e)
+      }
+    }
+    if (first != null) throw first
   }
 }

@@ -32,9 +32,11 @@ object Adaptive {
     * branches (spec-pinned in Round13OptSpec).
     */
   def copartitionByKey(df: DataFrame, key: Column): DataFrame = {
-    val minBytes = df.sparkSession.conf
-      .getOption("spark.graft.copartition.minBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+    val confKey = "spark.graft.copartition.minBytes"
+    val minBytes = df.sparkSession.conf.getOption(confKey).map { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$confKey must be a non-negative byte count, got '$v'"))
+    }.getOrElse(64L << 20)
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(minBytes)) df
     else df.repartition(key)
   }

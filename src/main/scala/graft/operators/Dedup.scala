@@ -86,9 +86,10 @@ object Dedup {
     // because the cut changes `inter`.
     // Deliberately NOT persisted: the shingle subplan appears three
     // times statically (pairs + both size joins) but AQE stage reuse
-    // absorbs the copies at runtime — ProfileCC's interleaved A/B
-    // measured the persist+count variant ~2× SLOWER (cache write, an
-    // extra job, broken stage pipelining) than this lazy shape.
+    // absorbs the copies at runtime — an interleaved A/B
+    // (graft.ProfileCC, last in the tree at commit 5ff44ba) measured
+    // the persist+count variant ~2× SLOWER (cache write, an extra job,
+    // broken stage pipelining) than this lazy shape.
     val pairs = shingles
       .groupBy("shingle").agg(collect_list(col("doc_id")).as("ds"))
       .filter(size(col("ds")) > 1)
@@ -244,23 +245,22 @@ object Dedup {
     // downstream branches read it) but not the operator RUN — the
     // runner (Verify/Bench/spec) frees it after forcing the result.
     // r13: this operator OPTS OUT of cached-plan AQE coalescing (back
-    // to the Spark default) for its own run. The coalescer is
+    // to the Spark default) for its own caches. The coalescer is
     // bytes-driven, and this cached subplan is the one in the engine
     // whose cost is compute-dense per byte — the bucket→pair expansion
     // and the array_intersect verify do quadratic-in-bucket work over a
     // KB-sized frame, so coalescing its stages to one partition
     // serializes real compute (interleaved 4-way A/B at sf0.1:
     // 1.5–1.9 s with fixed cache partitioning vs 3.2–3.5 s coalesced,
-    // both count variants — tools/profile_r13_minhash_ab.txt). The conf
-    // restores at CacheScope release, i.e. after the runner forces the
-    // result — exactly this operator's lifetime.
-    val coalesceKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCoalesce = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    graft.CacheScope.defer(() => prevCoalesce match {
-      case Some(v) => spark.conf.set(coalesceKey, v)
-      case None => spark.conf.unset(coalesceKey)
-    })
+    // both count variants — tools/profile_r13_minhash_ab.txt). Spark
+    // reads the key only when persist() registers a cache, and builds
+    // the cached plan in a cloned session that keeps the value, so the
+    // override holds around each persist alone and the caller's conf
+    // is unchanged once this method returns.
+    def persistUncoalesced(df: DataFrame): DataFrame =
+      graft.CacheScope.withConf(spark,
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false")(
+        graft.CacheScope.track(df.persist()))
     // the (LSH-pruned, tiny) pair set materializes ONCE — the verify
     // phase below reads it from three branches, and at 100 TB nothing
     // upstream of it (the full band shuffle) may ever re-run. r13: no
@@ -268,7 +268,7 @@ object Dedup {
     // reads `cand` through candIds on its one path, so that single job
     // populates BOTH caches (one driver round-trip saved; the final
     // join's three branches then read only caches, exactly as before)
-    val cand = graft.CacheScope.track(bandCandidates(bands).persist())
+    val cand = persistUncoalesced(bandCandidates(bands))
     // verify candidates with true Jaccard — shingle SETS built ONLY for
     // candidate docs (the semi-join runs BEFORE tokenization, so the
     // split/shingle kernels see candidate rows, not the corpus). The
@@ -282,16 +282,16 @@ object Dedup {
     // doc id). Zero-intersection pairs fall out as size 0 — no left
     // join / fill needed.
     val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val candShingles = graft.CacheScope.track(
+    val candShingles = persistUncoalesced(
       corpus(spark, dir).join(candIds, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
-          HashFunctions.shingleHashes(split(col("text"), " ")).as("shs"))
-        .persist())
+          HashFunctions.shingleHashes(split(col("text"), " ")).as("shs")))
     // persist + eager count measured NECESSARY here (unlike the ngram
     // shingle subplan, where lazy + AQE reuse won): the two verify join
     // sides do NOT share an exchange at runtime, so the lazy variant
-    // recomputes the semi-join + shingle kernel twice — ProfileMinhash's
-    // interleaved A/B reads ~1.7 s persisted vs ~2.1 s lazy at sf0.1.
+    // recomputes the semi-join + shingle kernel twice — an interleaved
+    // A/B (graft.ProfileMinhash, last in the tree at commit 5ff44ba)
+    // read ~1.7 s persisted vs ~2.1 s lazy at sf0.1.
     candShingles.count()
     cand
       .join(candShingles.as("sa"), col("id_a") === col("sa.doc_id"))

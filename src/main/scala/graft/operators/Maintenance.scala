@@ -2480,32 +2480,23 @@ object Maintenance {
       val ev = Tables.events(spark, dir)
       snapshotWrite(ev.filter(col("event_id") % 2 === 0), s"$p/events_t",
         nFiles = 8, statsCols = Seq("event_id"), clusterBy = Some("event_id"))
-      val tag = java.util.UUID.randomUUID().toString.take(8)
-      val cat = s"graft_cat_$tag"
-      spark.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      spark.conf.set(s"spark.sql.catalog.$cat.root", p)
-      val view = s"graft_cat_src_$tag"
-      ev.filter(col("event_id") % 2 === 1).createOrReplaceTempView(view)
-      try {
-        spark.sql(s"INSERT INTO $cat.events_t SELECT * FROM $view")
-        spark.sql(
-          s"""SELECT version, event_type, n, sum_value FROM (
-             |  SELECT CAST(1 AS BIGINT) AS version, event_type,
-             |    COUNT(*) AS n,
-             |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-             |  FROM $cat.events_t VERSION AS OF 1 GROUP BY event_type
-             |  UNION ALL
-             |  SELECT CAST(2 AS BIGINT), event_type, COUNT(*),
-             |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-             |  FROM $cat.events_t GROUP BY event_type)
-             |ORDER BY version, event_type""".stripMargin)
-      } finally {
-        spark.catalog.dropTempView(view): Unit
-        // the catalog INSTANCE stays cached by name (harmless — the
-        // name is per-run), but the conf keys need not outlive the run
-        spark.conf.unset(s"spark.sql.catalog.$cat")
-        spark.conf.unset(s"spark.sql.catalog.$cat.root")
+      SqlSurface.withCatalog(spark, p) { cat =>
+        val view = s"${cat}_src"
+        ev.filter(col("event_id") % 2 === 1).createOrReplaceTempView(view)
+        try {
+          spark.sql(s"INSERT INTO $cat.events_t SELECT * FROM $view")
+          spark.sql(
+            s"""SELECT version, event_type, n, sum_value FROM (
+               |  SELECT CAST(1 AS BIGINT) AS version, event_type,
+               |    COUNT(*) AS n,
+               |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+               |  FROM $cat.events_t VERSION AS OF 1 GROUP BY event_type
+               |  UNION ALL
+               |  SELECT CAST(2 AS BIGINT), event_type, COUNT(*),
+               |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
+               |  FROM $cat.events_t GROUP BY event_type)
+               |ORDER BY version, event_type""".stripMargin)
+        } finally { spark.catalog.dropTempView(view): Unit }
       }
     }
 

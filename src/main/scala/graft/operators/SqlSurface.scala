@@ -30,13 +30,9 @@ object SqlSurface {
   private[graft] def withCatalog[T](spark: SparkSession, root: String)(
       body: String => T): T = {
     val cat = s"graft_sql_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.SnapshotCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    try body(cat) finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-    }
+    graft.CacheScope.withConf(spark,
+      s"spark.sql.catalog.$cat" -> classOf[graft.sources.SnapshotCatalog].getName,
+      s"spark.sql.catalog.$cat.root" -> root)(body(cat))
   }
 
   import graft.functions.Compat._

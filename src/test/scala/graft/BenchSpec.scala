@@ -28,4 +28,15 @@ class BenchSpec extends SparkSpec {
     // the JSON stays single-line parseable even with exception text
     assert(!rep.json.contains("\n"))
   }
+
+  test("cpu tick total counts guest time once") {
+    // guest and guest_nice are already inside user and nice, so only
+    // the first eight columns add up to the total
+    val (busy, idle, steal, total) = Bench.parseCpuLine(
+      "cpu  100 20 30 400 50 6 7 8 900 90")
+    assert(busy === 100 + 20 + 30 + 6 + 7)
+    assert(idle === 400 + 50)
+    assert(steal === 8)
+    assert(total === 100 + 20 + 30 + 400 + 50 + 6 + 7 + 8)
+  }
 }

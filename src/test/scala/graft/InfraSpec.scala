@@ -514,37 +514,69 @@ class InfraSpec extends SparkSpec {
     }
   }
 
-  test("CacheScope enforces the single-runner contract across threads") {
+  /** Drop every cache and persisted RDD other suites left behind. */
+  private def clearCaches(): Unit = {
+    CacheScope.releaseAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
+  test("CacheScope releases only what the calling thread registered") {
     import java.util.concurrent.atomic.AtomicReference
-    CacheScope.releaseAll() // clean slate (owning thread or empty: ok)
+    clearCaches()
     val df = spark.range(10).toDF("id").persist()
     try {
+      df.count()
       CacheScope.track(df)
-      // releaseAll from a DIFFERENT thread while caches are live → throw
-      val crossRelease = new AtomicReference[Throwable]()
-      val t1 = new Thread(() =>
+      // another runner's release on another thread: no error, and it
+      // cannot reach this thread's registrations
+      val other = new AtomicReference[Throwable]()
+      val t = new Thread(() =>
         try CacheScope.releaseAll()
-        catch { case e: Throwable => crossRelease.set(e) })
-      t1.start(); t1.join()
-      assert(crossRelease.get().isInstanceOf[IllegalStateException],
-        s"cross-thread releaseAll must fail fast, got ${crossRelease.get()}")
-      assert(df.storageLevel.useMemory, "foreign thread must NOT have freed the cache")
-      // registering from a different thread while live → throw
-      val crossTrack = new AtomicReference[Throwable]()
-      val t2 = new Thread(() =>
-        try { CacheScope.defer(() => ()); () }
-        catch { case e: Throwable => crossTrack.set(e) })
-      t2.start(); t2.join()
-      assert(crossTrack.get().isInstanceOf[IllegalStateException])
-      // the owning thread still releases normally
+        catch { case e: Throwable => other.set(e) })
+      t.start(); t.join()
+      assert(other.get() === null, s"foreign releaseAll failed: ${other.get()}")
+      assert(df.storageLevel.useMemory, "a foreign thread must not free this thread's cache")
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+      // the registering thread's own release frees it
       CacheScope.releaseAll()
-      // and once empty, any thread may register (new owner binds)
-      val fresh = new AtomicReference[Throwable]()
-      val t3 = new Thread(() =>
-        try { CacheScope.defer(() => ()); CacheScope.releaseAll() }
-        catch { case e: Throwable => fresh.set(e) })
-      t3.start(); t3.join()
-      assert(fresh.get() === null, s"fresh-owner registration failed: ${fresh.get()}")
+      assert(df.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     } finally df.unpersist(blocking = true)
+  }
+
+  test("CacheScope.releaseAll runs every action, then rethrows the first failure") {
+    clearCaches()
+    val a = spark.range(10).toDF("id").persist()
+    val b = spark.range(20).toDF("id").persist()
+    try {
+      a.count(); b.count()
+      CacheScope.track(a)
+      CacheScope.defer(() => throw new IllegalStateException("first"))
+      CacheScope.defer(() => throw new IllegalArgumentException("second"))
+      CacheScope.track(b)
+      val e = intercept[IllegalStateException](CacheScope.releaseAll())
+      assert(e.getMessage === "first")
+      assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("second"))
+      // both caches freed although a release action between them threw
+      assert(a.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+      assert(b.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+      val live = spark.sparkContext.getPersistentRDDs
+      assert(live.isEmpty, s"leaked: ${live.values.mkString("; ")}")
+      // the failed release still emptied the registry
+      CacheScope.releaseAll()
+    } finally { a.unpersist(blocking = true); b.unpersist(blocking = true) }
+  }
+
+  test("profile.conf alternatives expand to the variants the profiler interleaves") {
+    val (fixed, variants) = graft.tools.Profile.parseConf(
+      "spark.sql.adaptive.enabled=true,a.k=0|64,b.k=x=1|y")
+    assert(fixed === Seq("spark.sql.adaptive.enabled" -> "true"))
+    assert(variants === Seq(
+      Seq("a.k" -> "0", "b.k" -> "x=1"), Seq("a.k" -> "0", "b.k" -> "y"),
+      Seq("a.k" -> "64", "b.k" -> "x=1"), Seq("a.k" -> "64", "b.k" -> "y")))
+    // no alternatives: one variant that overrides nothing
+    assert(graft.tools.Profile.parseConf("")._2 === Seq(Seq.empty))
+    intercept[IllegalArgumentException](graft.tools.Profile.parseConf("novalue"))
   }
 }

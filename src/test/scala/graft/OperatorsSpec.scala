@@ -31,6 +31,61 @@ class OperatorsSpec extends SparkSpec {
       s"leaked cached RDDs after release: ${live.values.map(_.toString).mkString("; ")}")
   }
 
+  test("dedupMinhash leaves the session conf as it found it") {
+    CacheScope.releaseAll()
+    val before = spark.conf.getAll
+    try {
+      operators.Dedup.dedupMinhash(spark, sfDir)
+      val after = spark.conf.getAll
+      val diff = (before.toSet diff after.toSet) ++ (after.toSet diff before.toSet)
+      assert(diff.isEmpty, s"conf changed by dedupMinhash: $diff")
+    } finally CacheScope.releaseAll()
+  }
+
+  test("dedupMinhash's candidate cache keeps its shuffle partitions") {
+    // The operator opts its caches out of AQE final-stage coalescing:
+    // the candidate cache keeps spark.sql.shuffle.partitions slices,
+    // where the same frame persisted under the session conf coalesces.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def candParts(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation if r.output.map(_.name).contains("sz_a") =>
+          r.cacheBuilder.cachedColumnBuffers.getNumPartitions
+      }.head
+    CacheScope.releaseAll()
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val optedOut = try candParts(operators.Dedup.dedupMinhash(spark, sfDir))
+      finally CacheScope.releaseAll()
+    val d = operators.Dedup
+    val plain = d.bandCandidates(d.bandBuckets(d.corpus(spark, sfDir))).persist()
+    val coalesced = try { plain.count(); candParts(plain) }
+      finally plain.unpersist(blocking = true)
+    assert(optedOut === shufflePartitions)
+    assert(coalesced < shufflePartitions,
+      "under the session conf the same cache must coalesce (else this spec shows nothing)")
+  }
+
+  test("oracle-backed ops with exchanges, windows or loops are partitioning-invariant") {
+    // Default-tier subset of the slow full-registry sweep below: the
+    // same determinism claim on the ops whose results a shuffle width
+    // could plausibly reach.
+    val names = Seq("q_agg_groupby", "q_sb_metrics", "q_mwu", "q_topn_per_group",
+      "q_sessionize", "q_dedup_minhash", "q_dedup_clusters", "q_pagerank",
+      "q_kcore", "q_quality_classifier")
+    val ops = names.map(Registry.byName)
+    ops.foreach(op => assert(op.oracle.isDefined, s"${op.name} has no oracle"))
+    val hashes = Seq("1", "7").map { parts =>
+      CacheScope.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
+        ops.map { op =>
+          try Verify.contentHash(op.fn(spark, sfDir)) finally CacheScope.releaseAll()
+        }
+      }
+    }
+    names.zip(hashes(0).zip(hashes(1))).foreach { case (n, (h1, h7)) =>
+      assert(h1 === h7, s"$n differs between 1 and 7 shuffle partitions")
+    }
+  }
+
   test("every oracle-backed query is partitioning-invariant", SlowTest) {
     // The repo's core determinism claim: results do not depend on how
     // data is partitioned (decimal-exact sums, order-invariant

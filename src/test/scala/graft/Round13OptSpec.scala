@@ -52,6 +52,16 @@ class Round13OptSpec extends AnyFunSuite {
       assert(shaped.queryExecution.analyzed.toString.contains("RepartitionByExpression"),
         "above the threshold the r12 repartition(key) shape must engage")
     } finally spark.conf.unset("spark.graft.copartition.minBytes")
+    // a malformed threshold fails loudly, naming the key and the value
+    for (bad <- Seq("64MB", "-1")) {
+      spark.conf.set("spark.graft.copartition.minBytes", bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          graft.operators.Adaptive.copartitionByKey(df, col("k")))
+        assert(e.getMessage.contains("spark.graft.copartition.minBytes") &&
+          e.getMessage.contains(bad), e.getMessage)
+      } finally spark.conf.unset("spark.graft.copartition.minBytes")
+    }
   }
 
   test("narrowed money casts stay inside decimal(10,2): data bound enforced loudly") {
