@@ -177,8 +177,8 @@ object Bench {
       "m_zorder" -> (() => staged { p =>
         Maintenance.snapshotWrite(liProj, s"$p/t", nFiles = 8,
           statsCols = Seq("x"), clusterBy = Some("x"))
-        timed(Maintenance.compactSnapshotZorder(spark, s"$p/t", "x", "y",
-          targetBytes = 128L << 20): Unit)
+        timed(Maintenance.compactSnapshotZorder(spark, s"$p/t", Seq("x", "y"),
+          targetBytes = 128L << 20, bits = 8): Unit)
       }),
       "m_zorder3" -> (() => staged { p =>
         Maintenance.snapshotWrite(evProj, s"$p/t", nFiles = 8,

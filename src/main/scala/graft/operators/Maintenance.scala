@@ -312,6 +312,18 @@ object Maintenance {
       .filter(_.matches("v\\d{5,}")).map(_.drop(1).toLong).sorted
   }
 
+  /** The version a read or rewrite of `path` works on: `asOf`, else
+    * the head. Refuses a table with no versions, and a version the
+    * listing does not hold (expired or never committed). */
+  private[graft] def resolveVersion(spark: SparkSession, path: String,
+      asOf: Option[Long] = None): Long = {
+    val vs = snapshotVersions(spark, path)
+    require(vs.nonEmpty, s"$path has no committed versions")
+    val v = asOf.getOrElse(vs.last)
+    require(vs.contains(v), s"version $v not in $vs (expired or never committed)")
+    v
+  }
+
   /** Per-file (n_rows, min/max per stats column) for the parquet files
     * under `dir`, derived from the JUST-WRITTEN files (the snapshot
     * discipline: the durable parquet is the source of truth, so a
@@ -325,9 +337,10 @@ object Maintenance {
     * empty-fallback read built on it) unable to infer a schema. They
     * are appended from the FS listing with n_rows = 0 and NULL stats —
     * NULL stats prune them from every range read, which is exactly
-    * right for a file with no rows. */
+    * right for a file with no rows. Returns the stats frame and its
+    * Σ n_rows, summed on the driver from the rows already collected. */
   private def writtenFileStats(spark: SparkSession, dir: String,
-      relPrefix: String, statsCols: Seq[String]): DataFrame = {
+      relPrefix: String, statsCols: Seq[String]): (DataFrame, Long) = {
     val stats = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     val agg = spark.read.parquet(dir)
@@ -347,8 +360,9 @@ object Maintenance {
       .map(relPrefix + _).filterNot(seen).toIndexedSeq
       .map(f => org.apache.spark.sql.Row.fromSeq(
         f +: 0L +: Seq.fill(statsCols.size * 2)(null)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows.toIndexedSeq ++ zeroRow: _*), agg.schema)
+    (spark.createDataFrame(
+      java.util.Arrays.asList(rows.toIndexedSeq ++ zeroRow: _*), agg.schema),
+      rows.map(_.getLong(1)).sum)
   }
 
   /** Land `df` as a new immutable batch under `path/data/<uuid>/` and
@@ -419,10 +433,9 @@ object Maintenance {
       case None => observed.repartition(nFiles)
     })
     shaped.write.mode("overwrite").parquet(s"$path/data/$batch")
-    val newFiles = writtenFileStats(spark, s"$path/data/$batch", s"$batch/", statsCols)
+    val (newFiles, rowsWritten) =
+      writtenFileStats(spark, s"$path/data/$batch", s"$batch/", statsCols)
     val rowsIn = obs.get("rows_in").asInstanceOf[Long]
-    val rowsWritten = newFiles.agg(coalesce(sum("n_rows"), lit(0L)))
-      .head().getLong(0)
     if (rowsIn != rowsWritten)
       throw new SnapshotTornWrite(
         s"torn write at $path/data/$batch: the write job consumed " +
@@ -517,9 +530,7 @@ object Maintenance {
     * merged-footer read (exact but O(distinct batch schemas)). */
   def tableSchema(spark: SparkSession, path: String,
       asOf: Option[Long] = None): org.apache.spark.sql.types.StructType = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val v = asOf.getOrElse(vs.last)
+    val v = resolveVersion(spark, path, asOf)
     recordedSchema(spark, path, v).getOrElse(
       readSnapshot(spark, path, Some(v), mergeSchema = true).schema)
   }
@@ -586,13 +597,8 @@ object Maintenance {
     * stats-tightness audits, layout comparisons. Latest version when
     * `asOf` is None. */
   def snapshotManifest(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs (expired or never committed)")
-    manifestOf(spark, path, v)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    manifestOf(spark, path, resolveVersion(spark, path, asOf))
 
   /** Create the table: version 1 contains exactly `df`. `statsCols`
     * adds per-file min/max columns to every manifest (enabling
@@ -678,10 +684,7 @@ object Maintenance {
     * their manifests are immutable. */
   def readSnapshotRange(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs (expired or never committed)")
+    val v = resolveVersion(spark, path, asOf)
     val files = manifestOf(spark, path, v)
       .filter(col(s"min_$c") <= hi && col(s"max_$c") >= lo)
       .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
@@ -702,10 +705,7 @@ object Maintenance {
     * per distinct batch schema, and most reads know their schema. */
   def readSnapshot(spark: SparkSession, path: String,
       asOf: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs (expired or never committed)")
+    val v = resolveVersion(spark, path, asOf)
     val files = manifestOf(spark, path, v)
       .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
     if (files.isEmpty)
@@ -810,32 +810,6 @@ object Maintenance {
     (expire.size.toLong, removed)
   }
 
-  /** Compact a snapshot table IN the snapshot layer: read the head
-    * version, rewrite it as ~`targetBytes` files (optionally
-    * range-clustered with tight manifest stats), and commit the result
-    * as a REPLACE version. Readers never see a half-compacted table
-    * (the new manifest is one atomic rename), concurrent time-travel
-    * readers of old versions are untouched, and the pre-compaction
-    * files stay reclaimable-but-readable history until
-    * [[vacuumSnapshots]] expires them — OPTIMIZE without a lock, the
-    * reason every table format models compaction as just another
-    * commit. Streaming-sink tables compact too: the replace manifest
-    * carries the head's batch-id high watermark forward, so a replayed
-    * micro-batch arriving after a compaction is still recognized and
-    * skipped. Returns the new version id.
-    *
-    * `statsCols` defaults to the columns the head manifest already
-    * carries (everything outside the file/n_rows/batch_id bookkeeping),
-    * so compacting a stats-carrying table cannot silently produce a
-    * head manifest that breaks [[readSnapshotRange]] or the next
-    * [[snapshotAppend]] with the original statsCols — the manifest
-    * schema is part of the table contract and compaction preserves it
-    * unless explicitly overridden. */
-  /** Two-column compatibility face of the N-column overload below. */
-  def compactSnapshotZorder(spark: SparkSession, path: String,
-      cx: String, cy: String, targetBytes: Long, bits: Int = 8): Long =
-    compactSnapshotZorder(spark, path, Seq(cx, cy), targetBytes, bits)
-
   /** OPTIMIZE … ZORDER BY: rewrite the head version clustered on the
     * Morton interleave of 2–4 columns, so the layout prunes on EVERY
     * z axis — a table sorted on one key answers range predicates on
@@ -878,9 +852,7 @@ object Maintenance {
     require(zCols.size >= 2 && zCols.size <= 4,
       s"ZORDER BY takes 2 to 4 columns, got ${zCols.size}: ${zCols.mkString(", ")}")
     require(bits >= 1 && bits <= 15, s"bits must be in [1, 15], got $bits")
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions to z-order")
-    val headV = vs.last
+    val headV = resolveVersion(spark, path)
     val mf = manifestOf(spark, path, headV)
     require(!mf.columns.contains("part") && !mf.columns.contains("batch_id"),
       s"$path is a partitioned or streaming-sink snapshot table — " +
@@ -1163,6 +1135,27 @@ object Maintenance {
     keys.zipWithIndex.map { case (key, p) => p -> key }.toMap
   }
 
+  /** Compact a snapshot table IN the snapshot layer: read the head
+    * version, rewrite it as ~`targetBytes` files (optionally
+    * range-clustered with tight manifest stats), and commit the result
+    * as a REPLACE version. Readers never see a half-compacted table
+    * (the new manifest is one atomic rename), concurrent time-travel
+    * readers of old versions are untouched, and the pre-compaction
+    * files stay reclaimable-but-readable history until
+    * [[vacuumSnapshots]] expires them — OPTIMIZE without a lock, the
+    * reason every table format models compaction as just another
+    * commit. Streaming-sink tables compact too: the replace manifest
+    * carries the head's batch-id high watermark forward, so a replayed
+    * micro-batch arriving after a compaction is still recognized and
+    * skipped. Returns the new version id.
+    *
+    * `statsCols` defaults to the columns the head manifest already
+    * carries (everything outside the file/n_rows/batch_id bookkeeping),
+    * so compacting a stats-carrying table cannot silently produce a
+    * head manifest that breaks [[readSnapshotRange]] or the next
+    * [[snapshotAppend]] with the original statsCols — the manifest
+    * schema is part of the table contract and compaction preserves it
+    * unless explicitly overridden. */
   def compactSnapshot(spark: SparkSession, path: String, targetBytes: Long,
       statsCols: Seq[String] = Nil, clusterBy: Option[String] = None): Long = {
     // resolve the head version ONCE; the commit below is pinned to it,
@@ -1170,9 +1163,7 @@ object Maintenance {
     // turns into a thrown conflict — a listing-time version would let
     // this commit succeed one number later and silently DROP the
     // concurrent batch from the head (lost update)
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions to compact")
-    val headV = vs.last
+    val headV = resolveVersion(spark, path)
     // mergeSchema + align: a whole-table rewrite of a schema-evolved
     // table must carry evolution-added columns — a plain read can
     // adopt a pre-evolution footer's schema and silently null them
@@ -1310,9 +1301,7 @@ object Maintenance {
     // the rewrite derives from table state, so a day re-landed during
     // the rewrite window must turn into a thrown conflict — an
     // unpinned commit would quietly overwrite it with the stale bytes
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val headV = vs.last
+    val headV = resolveVersion(spark, path)
     val mf = snapshotManifest(spark, path, Some(headV))
     require(mf.columns.contains("part"),
       s"$path is not a partitioned snapshot table")
@@ -1345,9 +1334,7 @@ object Maintenance {
     * derived from; returns the new version id. */
   def snapshotDropPartition(spark: SparkSession, path: String,
       partValue: String): Long = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val headV = vs.last
+    val headV = resolveVersion(spark, path)
     val mf = manifestOf(spark, path, headV)
     require(mf.columns.contains("part"),
       s"$path is not a partitioned snapshot table")
@@ -1403,10 +1390,7 @@ object Maintenance {
     * metadata), so the scan cost is O(requested partitions). */
   def readSnapshotPartitions(spark: SparkSession, path: String,
       values: Seq[String], asOf: Option[Long] = None): DataFrame = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs (expired or never committed)")
+    val v = resolveVersion(spark, path, asOf)
     val mf = manifestOf(spark, path, v)
     require(mf.columns.contains("part"),
       s"$path is not a partitioned snapshot table")
@@ -1593,53 +1577,44 @@ object Maintenance {
     * the reference's nightly WRITE_TRUNCATE upload done right: apply a
     * changeset without rewriting the table.
     *
-    * Copy-on-write with manifest pruning: ONLY the files whose
-    * [min_key, max_key] range contains at least one changeset key are
-    * read and rewritten through the [[Relational.applyMerge]] kernel
-    * (full-outer join + CASE resolution — insert keys that match no
-    * file surface on the changeset side of the same join); every
-    * untouched file's manifest row is carried VERBATIM into the new
-    * version. At 100 TB a key-clustered table turns a day's changeset
-    * into a rewrite of the few files its keys actually live in — the
-    * commit is O(touched + changeset), never O(table).
+    * Copy-on-write on the row-level substrate the SQL verbs share:
+    * [[dmlBase]] resolves the base version (`asOf`, default head) and
+    * its manifest and refuses streaming-sink tables; partitioned tables
+    * refuse like every other row-level verb. [[keyRangeFiles]] picks
+    * ONLY the files whose [min_key, max_key] range contains at least
+    * one changeset key — the same helper SQL MERGE prunes its equality
+    * keys with; [[readDataFiles]] reads them and the
+    * [[Relational.applyMerge]] kernel rewrites them (full-outer join +
+    * CASE resolution — insert keys that match no file surface on the
+    * changeset side of the same join); [[rewriteFilesCommit]] carries
+    * every untouched file's manifest row VERBATIM and commits the
+    * rewrite clustered on `key`, pinned to the base version, so a
+    * concurrent commit in the read-rewrite window surfaces as a thrown
+    * conflict, never as a silent lost update. At 100 TB a key-clustered
+    * table turns a day's changeset into a rewrite of the few files its
+    * keys actually live in — the commit is O(touched + changeset),
+    * never O(table).
     *
-    * The file-selection join broadcasts the MANIFEST (one row per
-    * file — planner-scale) against the changeset's distinct keys, so
-    * an arbitrarily large changeset never collects to the driver; only
-    * the matched FILE NAMES do.
-    *
-    * Pinned to the version the merge derived from (`asOf`, default
-    * head): a concurrent commit in the read-rewrite window surfaces as
-    * a thrown conflict, never as a silent lost update. Changeset
-    * contract is [[Relational.applyMerge]]'s: unique keys, full row
-    * images, op ∈ {D, U, I}. The table must have been written with
-    * manifest stats on `key` (statsCols) — merge refuses to run
+    * Changeset contract is [[Relational.applyMerge]]'s: unique keys,
+    * full row images, op ∈ {D, U, I}. The table must have been written
+    * with manifest stats on `key` (statsCols) — merge refuses to run
     * without them, because "no stats" would force a whole-table
     * rewrite that should be an explicit [[snapshotReplace]] instead.
     * Returns the new version id. */
   def snapshotMerge(spark: SparkSession, path: String, changes: DataFrame,
       key: String, nFiles: Int, asOf: Option[Long] = None): Long = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions to merge into")
-    val baseV = asOf.getOrElse(vs.last)
-    require(vs.contains(baseV), s"version $baseV not in $vs")
-    val mf = manifestOf(spark, path, baseV)
+    val (baseV, mf) = dmlBase(spark, path, asOf, "MERGE")
+    requireUnpartitioned(path, mf, "merge into")
     require(mf.columns.contains(s"min_$key") && mf.columns.contains(s"max_$key"),
       s"$path carries no manifest stats on '$key' — merge needs them to " +
         "prune; write the table with statsCols (or use snapshotReplace)")
-    val statsCols = manifestStatsCols(mf)
-    val touched = changes.select(col(key).as("__k")).distinct()
-      .join(broadcast(mf.select(col("file"), col(s"min_$key"), col(s"max_$key"))),
-        col("__k") >= col(s"min_$key") && col("__k") <= col(s"max_$key"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
+    val touched = keyRangeFiles(mf, changes.select(col(key)), key)
+    // no file touched (an all-insert changeset): the base is the
+    // version's empty frame in its plain-read schema — the schema
+    // applyMerge holds the changeset's full row images to
     val base =
       if (touched.isEmpty) readSnapshot(spark, path, Some(baseV)).filter(lit(false))
-      // mergeSchema for the same reason as snapshotDelete: a touched
-      // set spanning schema generations must not rewrite survivors
-      // without their evolved columns (applyMerge then demands the
-      // changeset carry them too — loud, instead of silent data loss)
-      else spark.read.option("mergeSchema", "true")
-        .parquet(touched.toIndexedSeq.sorted.map(f => s"$path/data/$f"): _*)
+      else readDataFiles(spark, path, touched, baseV)
     // r13 (guide §6 read-once, §5 cache-what-you-reuse): commitSnapshot
     // consumes `merged` THREE times — the deterministic cluster shaper's
     // min/max and percentile planning passes plus the write job itself —
@@ -1650,10 +1625,8 @@ object Maintenance {
     // torn-write observation are unchanged — the write job still counts
     // the rows it consumes, now from the cache.
     val merged = Relational.applyMerge(base, changes, key).persist()
-    val carry: DataFrame => DataFrame = fresh =>
-      mf.filter(!col("file").isin(touched.toSeq: _*)).unionByName(fresh)
-    try commitSnapshot(merged, path, nFiles, carry, statsCols, Some(col(key)),
-      Some(baseV))
+    try rewriteFilesCommit(spark, path, mf, touched, merged, nFiles,
+      Some(col(key)), baseV)
     finally merged.unpersist(blocking = false): Unit
   }
 
@@ -1703,10 +1676,8 @@ object Maintenance {
     * version — an explicit audit record that a restore ran. Returns
     * the new version id. */
   def snapshotRestore(spark: SparkSession, path: String, toV: Long): Long = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    require(vs.contains(toV), s"version $toV not in $vs (expired or never committed)")
-    val next = vs.last + 1
+    resolveVersion(spark, path, Some(toV)) // refuses an expired or unknown target
+    val next = resolveVersion(spark, path) + 1
     // the restored head's schema IS the restored version's
     publishManifest(spark, path, manifestOf(spark, path, toV), next,
       recordedSchema(spark, path, toV))
@@ -1754,63 +1725,35 @@ object Maintenance {
 
   /** Row-level DELETE of the key range [lo, hi] from a versioned
     * snapshot table — the GDPR/bad-partition verb beside
-    * [[snapshotMerge]]'s keyed upserts, copy-on-write with manifest
-    * pruning: ONLY the files whose [min_c, max_c] stats intersect the
-    * deleted range are read and rewritten with the complement
-    * (NULL-keyed rows are kept — NULL is not in any range); every
-    * untouched file's manifest row is carried VERBATIM. On a
+    * [[snapshotMerge]]'s keyed upserts. After its own admission (a
+    * non-empty range, manifest stats on `c`) it IS
+    * [[snapshotDeleteWhere]] of `c >= lo AND c <= hi`: the predicate's
+    * translated conjuncts keep ONLY the files whose [min_c, max_c]
+    * stats intersect the range, those are rewritten with the
+    * complement (NULL-keyed rows are kept — NULL is in no range), and
+    * every untouched file's manifest row is carried VERBATIM. On a
     * key-clustered table a contiguous deletion touches exactly the few
     * files holding that range, so the commit is O(touched), never
     * O(table). Zero-row files (NULL stats) never intersect and are
-    * always carried.
+    * always carried. The rewrite clusters on the table's layout key
+    * (its first stats column); `nFiles` <= 0 sizes it to the
+    * touched-file count.
     *
     * A range that provably touches no file is a metadata no-op: the
-    * head version is returned unchanged (no version churn — nothing
-    * was derived from table state, so there is nothing to record).
-    * Pinned to the version the delete derived from (`asOf`, default
-    * head): a concurrent commit in the read-rewrite window throws.
-    * Partitioned tables refuse — deleting a whole partition is
-    * [[snapshotOverwritePartition]] with the empty frame, which keeps
-    * the layout's purity proof. Streaming-sink tables refuse too
-    * (they never carry the manifest stats a pruned delete needs —
-    * [[snapshotSinkBatch]] commits stat-less batches; compact the sink
-    * into a batch table first). Returns the version id the table is
-    * at after the call. */
+    * head version is returned unchanged. Pinned to the version the
+    * delete derived from (`asOf`, default head): a concurrent commit in
+    * the read-rewrite window throws. Partitioned tables refuse (delete
+    * a partition with [[snapshotDropPartition]], or re-land it through
+    * [[snapshotOverwritePartition]]); streaming-sink tables carry no
+    * stats and refuse too. Returns the version id the table is at after
+    * the call. */
   def snapshotDelete(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long, nFiles: Int, asOf: Option[Long] = None): Long = {
     require(lo <= hi, s"empty delete range [$lo, $hi]")
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions to delete from")
-    val baseV = asOf.getOrElse(vs.last)
-    require(vs.contains(baseV), s"version $baseV not in $vs")
-    val mf = manifestOf(spark, path, baseV)
-    require(!mf.columns.contains("part"),
-      s"$path is a partitioned snapshot table — delete a partition by " +
-        "re-landing it (snapshotOverwritePartition), which keeps the " +
-        "purity-proof layout")
-    require(!mf.columns.contains("batch_id"),
-      s"$path is a streaming-sink table (stat-less batches) — compact " +
-        "it into a stats-carrying batch table before range deletes")
-    require(mf.columns.contains(s"min_$c") && mf.columns.contains(s"max_$c"),
+    require(manifestStatsCols(snapshotManifest(spark, path, asOf)).contains(c),
       s"$path carries no manifest stats on '$c' — delete needs them to " +
         "prune; write the table with statsCols")
-    val touched = mf.filter(col(s"min_$c") <= hi && col(s"max_$c") >= lo)
-      .select("file").collect().map(_.getString(0)).toSet
-    // a range no file can contain is a metadata no-op — nothing was
-    // derived from table state, so nothing commits; the caller gets
-    // the table's CURRENT head (what "the version after the call" is)
-    if (touched.isEmpty) return vs.last
-    // mergeSchema: the touched set may span schema generations (the
-    // evolution appends support) — a single-footer read would rewrite
-    // survivors from newer files WITHOUT their added columns, silently
-    // destroying that data in the new head
-    val residual = spark.read.option("mergeSchema", "true")
-      .parquet(touched.toIndexedSeq.sorted.map(f => s"$path/data/$f"): _*)
-      .filter(col(c).isNull || col(c) < lo || col(c) > hi)
-    val carry: DataFrame => DataFrame = fresh =>
-      mf.filter(!col("file").isin(touched.toSeq: _*)).unionByName(fresh)
-    commitSnapshot(residual, path, nFiles, carry, manifestStatsCols(mf),
-      Some(col(c)), Some(baseV))
+    snapshotDeleteWhere(spark, path, col(c) >= lo && col(c) <= hi, nFiles, asOf)
   }
 
   /** DELETE as a driver-visible query: stage events as a versioned
@@ -1841,17 +1784,18 @@ object Maintenance {
       |FROM events WHERE event_id < 100 OR event_id > 499
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  // ───── predicate-general row-level DML (the SQL-surface substrate) ──
+  // ───── the row-level DML substrate ──────────────────────────────────
   //
-  // [[snapshotDelete]]/[[snapshotMerge]] above serve the Scala API's
-  // key-range / keyed-changeset shapes; the verbs below generalize the
-  // same copy-on-write mechanics to ARBITRARY predicates so
-  // `spark.sql("DELETE FROM lake.t WHERE …")`, `UPDATE`, and
-  // `MERGE INTO` ([[graft.plans.SnapshotDmlStrategy]]) land on one
-  // shared substrate: translate the predicate's conjuncts to v1
-  // filters, exclude every file whose manifest [min,max] stats PROVE
-  // no row can match, rewrite only the survivors, carry the rest
-  // verbatim, commit pinned to the base version.
+  // Every row-level verb — Scala or SQL — is copy-on-write on the same
+  // pieces: [[dmlBase]] resolves the base version and its manifest;
+  // the files a rewrite must touch come from the manifest's min/max
+  // stats ([[touchedFiles]] for a predicate, [[keyRangeFiles]] for a
+  // key set); [[readDataFiles]] reads them; [[rewriteFilesCommit]]
+  // carries every other file verbatim and commits pinned to the base
+  // version. [[snapshotDeleteWhere]] (SQL DELETE and [[snapshotDelete]]),
+  // [[snapshotUpdateWhere]] (SQL UPDATE), [[snapshotMerge]] and SQL
+  // `MERGE INTO` ([[graft.plans.SnapshotDml.mergeInto]]) differ only in
+  // how they compute the replacement rows.
 
   /** File-survival predicate over a manifest's min/max stat columns
     * for one v1 filter: None when the filter can't exclude files
@@ -1903,13 +1847,18 @@ object Maintenance {
     * predicate row-level, so pruning is purely a cost lever).
     * `schemaDf` is any frame in the table's schema: the predicate is
     * RESOLVED against it first (the v1 translator asks expression
-    * dataTypes, which an unresolved column can't answer). */
+    * dataTypes, which an unresolved column can't answer). A widening
+    * cast the analyzer put on a column (an int key against
+    * [[snapshotDelete]]'s long bounds) is moved onto the literal, so
+    * the conjunct still translates and prunes. */
   private[graft] def touchedFiles(mf: DataFrame, schemaDf: DataFrame,
       cond: Column): Set[String] = {
-    val resolved = schemaDf.filter(cond).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.getOrElse(throw new IllegalStateException(
-      s"could not resolve DML predicate ${cond} against the table schema"))
+    val resolved = org.apache.spark.sql.catalyst.optimizer
+      .UnwrapCastInBinaryComparison(schemaDf.filter(cond).queryExecution.analyzed)
+      .collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.getOrElse(throw new IllegalStateException(
+        s"could not resolve DML predicate ${cond} against the table schema"))
     val mfCols = mf.columns.toSet
     val preds = splitConjuncts(resolved)
       .flatMap(org.apache.spark.sql.graft.Bridge.translateFilter)
@@ -1917,6 +1866,19 @@ object Maintenance {
     preds.foldLeft(mf)((m, p) => m.filter(p))
       .select("file").collect().map(_.getString(0)).toSet
   }
+
+  /** The files of `mf` whose [min_c, max_c] stats hold at least one
+    * value of the one-column frame `keys` — MERGE's pruning, for
+    * [[snapshotMerge]]'s key and each of SQL MERGE's equality keys.
+    * The manifest (one row per file) is broadcast against the keys'
+    * distinct values, so an arbitrarily large changeset never collects
+    * to the driver; only the matched file names do. */
+  private[graft] def keyRangeFiles(mf: DataFrame, keys: DataFrame,
+      c: String): Set[String] =
+    keys.toDF("__k").distinct()
+      .join(broadcast(mf.select(col("file"), col(s"min_$c"), col(s"max_$c"))),
+        col("__k") >= col(s"min_$c") && col("__k") <= col(s"max_$c"))
+      .select("file").distinct().collect().map(_.getString(0)).toSet
 
   /** Zero-row frame in exactly `schema` — the resolution target for
     * DML predicates (and the empty-table replacement): columns come
@@ -1976,16 +1938,22 @@ object Maintenance {
     * first). */
   private[graft] def dmlBase(spark: SparkSession, path: String,
       asOf: Option[Long], verb: String): (Long, DataFrame) = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions to $verb")
-    val baseV = asOf.getOrElse(vs.last)
-    require(vs.contains(baseV), s"version $baseV not in $vs")
+    val baseV = resolveVersion(spark, path, asOf)
     val mf = manifestOf(spark, path, baseV)
     require(!mf.columns.contains("batch_id"),
       s"$path is a streaming-sink table (stat-less batches) — compact it " +
         s"into a stats-carrying batch table before a row-level $verb")
     (baseV, mf)
   }
+
+  /** Row-level rewrites refuse partitioned tables: re-landing the
+    * partition keeps the purity-proof layout. */
+  private[graft] def requireUnpartitioned(path: String, mf: DataFrame,
+      verb: String): Unit =
+    require(!mf.columns.contains("part"),
+      s"$path is a partitioned snapshot table — $verb a partition by " +
+        "re-landing it (snapshotOverwritePartition), which keeps the " +
+        "purity-proof layout")
 
   /** The rewrite's re-cluster key: the table's first stats column (its
     * declared layout key), so a rewritten region keeps tight per-file
@@ -2059,7 +2027,7 @@ object Maintenance {
     if (mf.columns.contains("part")) {
       val v = partitionEqualityValue(mf, cond).getOrElse(
         throw new IllegalArgumentException(
-          s"$path is a partitioned snapshot table — SQL DELETE supports " +
+          s"$path is a partitioned snapshot table — a row-level DELETE supports " +
             "only a bare partition-equality predicate there (the " +
             "metadata-only partition drop); re-land the partition for " +
             "row-level deletes"))
@@ -2093,10 +2061,7 @@ object Maintenance {
       asOf: Option[Long] = None): Long = {
     require(set.nonEmpty, "UPDATE needs at least one assignment")
     val (baseV, mf) = dmlBase(spark, path, asOf, "UPDATE")
-    require(!mf.columns.contains("part"),
-      s"$path is a partitioned snapshot table — update a partition by " +
-        "re-landing it (snapshotOverwritePartition), which keeps the " +
-        "purity-proof layout")
+    requireUnpartitioned(path, mf, "update")
     val schema = tableSchema(spark, path, Some(baseV))
     val touched = touchedFiles(mf, emptyOf(spark, schema), cond)
     if (touched.isEmpty) return snapshotVersions(spark, path).last
@@ -2290,9 +2255,7 @@ object Maintenance {
     * artifact reads exactly as if that batch never ran. */
   def readSnapshotUpToBatch(spark: SparkSession, path: String,
       maxId: Long): DataFrame = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val mf = manifestOf(spark, path, vs.last)
+    val mf = manifestOf(spark, path, resolveVersion(spark, path))
     require(mf.columns.contains("batch_id"),
       s"$path is not a batch-stamped snapshot table")
     // NULL batch_id = a file that predates batch stamping (a plain
@@ -2309,9 +2272,7 @@ object Maintenance {
     * one batch's slice from its primary (shingles) without re-reading
     * any source. */
   def readSnapshotBatch(spark: SparkSession, path: String, id: Long): DataFrame = {
-    val vs = snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val mf = manifestOf(spark, path, vs.last)
+    val mf = manifestOf(spark, path, resolveVersion(spark, path))
     require(mf.columns.contains("batch_id"),
       s"$path is not a batch-stamped snapshot table")
     val files = mf.filter(col("batch_id") === id)

@@ -114,8 +114,9 @@ object SnapshotDml {
     *
     * Pruning: every `targetCol = sourceExpr` equality conjunct of the
     * ON clause with manifest stats restricts the touched set to files
-    * whose [min,max] contains at least one source key (the
-    * [[Maintenance.snapshotMerge]] mechanic); NOT MATCHED BY SOURCE
+    * whose [min,max] contains at least one source key
+    * ([[Maintenance.keyRangeFiles]], the helper
+    * [[Maintenance.snapshotMerge]] prunes with); NOT MATCHED BY SOURCE
     * clauses force a full-table touch (they rewrite rows no source key
     * points at). Inserts land even when no file is touched. Evolved
     * columns outside the relation schema pass through on target rows
@@ -133,10 +134,7 @@ object SnapshotDml {
     val attrById: Map[ExprId, AttributeReference] = targetAttrs.map(a => a.exprId -> a).toMap
 
     val (baseV, mf) = Maintenance.dmlBase(spark, path, None, "MERGE")
-    require(!mf.columns.contains("part"),
-      s"$path is a partitioned snapshot table — merge into a partition by " +
-        "re-landing it (snapshotOverwritePartition), which keeps the " +
-        "purity-proof layout")
+    Maintenance.requireUnpartitioned(path, mf, "merge into")
 
     val srcDf = Bridge.ofRows(spark, sourcePlan)
     val src = srcDf.toDF(sAttrs.indices.map(i => s"__s_$i"): _*)
@@ -154,15 +152,13 @@ object SnapshotDml {
     }.filter { case (n, _) =>
       mfCols.contains(s"min_$n") && mfCols.contains(s"max_$n")
     }
-    val allFiles: Set[String] =
+    // collected only when a branch below needs the whole file list
+    lazy val allFiles: Set[String] =
       mf.select("file").collect().map(_.getString(0)).toSet
     val touched: Set[String] =
       if (nmbs.nonEmpty || eqKeys.isEmpty) allFiles
       else eqKeys.map { case (n, kc) =>
-        src.select(kc.as("__k")).distinct()
-          .join(broadcast(mf.select(col("file"), col(s"min_$n"), col(s"max_$n"))),
-            col("__k") >= col(s"min_$n") && col("__k") <= col(s"max_$n"))
-          .select("file").distinct().collect().map(_.getString(0)).toSet
+        Maintenance.keyRangeFiles(mf, src.select(kc), n)
       }.reduce(_ intersect _)
 
     if (touched.isEmpty && notMatched.isEmpty)

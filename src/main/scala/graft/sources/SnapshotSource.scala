@@ -161,13 +161,7 @@ case class SnapshotTable(path: String, asOf: Option[Long],
 
   /** The pinned snapshot version id — resolved lazily so a pure write
     * to a not-yet-created table never asks for one. */
-  lazy val pinnedVersion: Long = {
-    val vs = Maintenance.snapshotVersions(spark, path)
-    require(vs.nonEmpty, s"$path has no committed versions")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs (expired or never committed)")
-    v
-  }
+  lazy val pinnedVersion: Long = Maintenance.resolveVersion(spark, path, asOf)
 
   private lazy val dataSchema: StructType = declaredSchema
     .orElse(if (mergeSchema) None // explicit merged-footer read wins
@@ -303,14 +297,6 @@ class SnapshotScanBuilder(spark: SparkSession, path: String, version: Long,
   private def pushedV1: Array[Filter] =
     pushedExprs.flatMap(org.apache.spark.sql.graft.Bridge.translateFilter).toArray
 
-  /** Manifest survival predicate for one pushed filter — delegated to
-    * the snapshot layer's single pruning semantics
-    * ([[Maintenance.manifestFilePredicate]], also the SQL DML verbs'
-    * pruner) so the two surfaces cannot drift. */
-  private def filePredicate(mfCols: Set[String], f: Filter)
-      : Option[org.apache.spark.sql.Column] =
-    Maintenance.manifestFilePredicate(mfCols, f)
-
   override def build(): Scan = {
     // CDC reads restrict the version's manifest to the files the diff
     // base doesn't list — the snapshotChanges planning, with the same
@@ -323,7 +309,9 @@ class SnapshotScanBuilder(spark: SparkSession, path: String, version: Long,
           .filter(!col("file").isin(before.toSeq: _*))
     }
     val mfCols = mf.columns.toSet
-    val pruned = pushedV1.flatMap(filePredicate(mfCols, _))
+    // the snapshot layer's one pruning semantics, shared with the DML
+    // verbs' pruner so the two surfaces cannot drift
+    val pruned = pushedV1.flatMap(Maintenance.manifestFilePredicate(mfCols, _))
       .foldLeft(mf)((m, p) => m.filter(p))
     val files = pruned.select("file").collect()
       .map(r => new HPath(s"$path/data/${r.getString(0)}"))
