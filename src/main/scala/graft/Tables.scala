@@ -10,8 +10,25 @@ import org.apache.spark.sql.functions.expr
   * column pruning / predicate pushdown is applied uniformly at the scan.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `spark.read.parquet` of the table, given the schema inference
+    * would pick, read off the footer on the driver
+    * ([[operators.Manifest.footerSchema]]): planning the read runs no
+    * schema-inference job. A table directory with subdirectories
+    * (partition discovery) infers as before. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(root)
+    val listed =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(root).toSeq.filterNot(s => operators.Manifest.hidden(s.getPath.getName))
+    val schema =
+      if (listed.exists(_.isDirectory)) None
+      else operators.Manifest.footerSchema(spark, listed.map(_.getPath.toString),
+        spark.sessionState.conf.isParquetSchemaMergingEnabled)
+    schema.fold(spark.read)(spark.read.schema).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "orders")

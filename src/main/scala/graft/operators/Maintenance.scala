@@ -328,7 +328,17 @@ object Maintenance {
     * under `dir`, derived from the JUST-WRITTEN files (the snapshot
     * discipline: the durable parquet is the source of truth, so a
     * nondeterministic input cannot produce stats that disagree with the
-    * data actually stored). File names are `relPrefix` + basename.
+    * data actually stored). File names are `relPrefix` + basename; rows
+    * go in file-name order.
+    *
+    * While the batch has at most [[Manifest.driverLimit]] files, the
+    * driver reads their footers: n_rows is the row-group counts' sum and
+    * min/max fold the column-chunk statistics ([[Manifest.footerStats]]
+    * — integral and date stats columns only). Every other case — more
+    * files, a string/decimal/floating/timestamp/boolean stats column, a
+    * chunk without min/max, a legacy-calendar footer — aggregates the
+    * files in a Spark job as before, with the schema taken from the
+    * first footer when the footers were read.
     *
     * ZERO-ROW part files (an empty batch — e.g. a day landed before its
     * test window opens) produce no aggregation group, but they MUST
@@ -337,32 +347,46 @@ object Maintenance {
     * empty-fallback read built on it) unable to infer a schema. They
     * are appended from the FS listing with n_rows = 0 and NULL stats —
     * NULL stats prune them from every range read, which is exactly
-    * right for a file with no rows. Returns the stats frame and its
-    * Σ n_rows, summed on the driver from the rows already collected. */
+    * right for a file with no rows. The footer path gives them the same
+    * row. */
   private def writtenFileStats(spark: SparkSession, dir: String,
-      relPrefix: String, statsCols: Seq[String]): (DataFrame, Long) = {
+      relPrefix: String, statsCols: Seq[String]): Manifest = {
+    val names = fsFor(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted.toIndexedSeq
+    val footers =
+      if (names.isEmpty || names.size > Manifest.driverLimit(spark)) None
+      else Some(names.map(n => Manifest.footer(spark,
+        new org.apache.hadoop.fs.Path(s"$dir/$n"), rowGroups = true)))
+    val data = footers.fold(spark.read)(fs => spark.read.schema(
+      org.apache.spark.sql.graft.Bridge.parquetFooterSchema(spark,
+        new org.apache.hadoop.fs.Path(s"$dir/${names.head}"), fs.head)))
+      .parquet(dir)
     val stats = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    val agg = spark.read.parquet(dir)
+    val agg = data
       .groupBy(concat(lit(relPrefix),
         element_at(split(input_file_name(), "/"), -1)).as("file"))
       .agg(count(lit(1)).as("n_rows"), stats: _*)
-    // collect ONCE (planner-scale: one row per written file) and fill
-    // in the zero-row complement from the FS listing in plain Scala —
-    // deriving the complement with an anti-join would embed the stats
-    // aggregation subtree twice and scan the just-written batch twice
-    // on every commit
-    val rows = agg.collect()
-    val seen = rows.map(_.getString(0)).toSet
-    val zeroRow = fsFor(spark, dir)
-      .listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .map(relPrefix + _).filterNot(seen).toIndexedSeq
-      .map(f => org.apache.spark.sql.Row.fromSeq(
-        f +: 0L +: Seq.fill(statsCols.size * 2)(null)))
-    (spark.createDataFrame(
-      java.util.Arrays.asList(rows.toIndexedSeq ++ zeroRow: _*), agg.schema),
-      rows.map(_.getLong(1)).sum)
+    val rows = footers.flatMap(
+      Manifest.footerStats(names, _, agg.schema, statsCols, relPrefix)
+    ).getOrElse {
+      // collect ONCE (planner-scale: one row per written file) and fill
+      // in the zero-row complement from the FS listing in plain Scala —
+      // deriving the complement with an anti-join would embed the stats
+      // aggregation subtree twice and scan the just-written batch twice
+      // on every commit
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(agg.schema)
+      val counted = agg.collect().toIndexedSeq
+        .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+      val seen = counted.map(_.getUTF8String(0).toString).toSet
+      val zeroRow = names.map(relPrefix + _).filterNot(seen)
+        .map(f => org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+          org.apache.spark.unsafe.types.UTF8String.fromString(f) +: 0L +:
+            Seq.fill(statsCols.size * 2)(null)))
+      (counted ++ zeroRow).sortBy(_.getUTF8String(0).toString)
+    }
+    Manifest.local(spark, agg.schema, rows)
   }
 
   /** Land `df` as a new immutable batch under `path/data/<uuid>/` and
@@ -407,7 +431,10 @@ object Maintenance {
     val batch = s"b${java.util.UUID.randomUUID().toString.take(12)}"
     // rows-in counter riding the write job itself (map side, below the
     // layout shuffle — zero extra pass): compared after the write
-    // against Σ per-file n_rows of the just-written files, so ANY torn
+    // against Σ per-file n_rows of the just-written files — the row
+    // counts their parquet footers declare, read on the driver while
+    // the batch has at most Manifest.driverLimit files, else counted by
+    // the stats aggregation's job (see writtenFileStats) — so ANY torn
     // write — rows lost or duplicated between the scan and the durable
     // parquet, whatever the cause (shuffle pathology, partial task
     // output, filesystem lies) — is structurally un-committable and
@@ -433,8 +460,8 @@ object Maintenance {
       case None => observed.repartition(nFiles)
     })
     shaped.write.mode("overwrite").parquet(s"$path/data/$batch")
-    val (newFiles, rowsWritten) =
-      writtenFileStats(spark, s"$path/data/$batch", s"$batch/", statsCols)
+    val newFiles = writtenFileStats(spark, s"$path/data/$batch", s"$batch/", statsCols)
+    val rowsWritten = newFiles.longs("n_rows").sum
     val rowsIn = obs.get("rows_in").asInstanceOf[Long]
     if (rowsIn != rowsWritten)
       throw new SnapshotTornWrite(
@@ -456,7 +483,7 @@ object Maintenance {
           case Some(v) => recordedSchema(spark, path, v)
             .flatMap(prev => unionSchema(prev, df.schema))
         }
-      publishManifest(spark, path, carryFn(newFiles), next, tableSchema)
+      publishManifest(spark, path, carryFn(newFiles.frame), next, tableSchema)
       next
     }
     // Optimistic retry: a commit whose carry COMMUTES with any
@@ -557,8 +584,8 @@ object Maintenance {
     // schema-in-metadata, the same move every table format makes
     schema.foreach { st =>
       val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_schema.json"), false)
-      out.write(st.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
+      try out.write(st.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
     }
     val marker = s"_commit-${java.util.UUID.randomUUID().toString.take(8)}"
     fs.create(new org.apache.hadoop.fs.Path(s"$tmp/$marker"), false).close()
@@ -577,8 +604,18 @@ object Maintenance {
     }
   }
 
-  private def manifestOf(spark: SparkSession, path: String, v: Long): DataFrame =
-    spark.read.parquet(f"$path/versions/v$v%05d")
+  /** Version `v`'s manifest, read in the driver thread with Spark's own
+    * parquet reader, its schema off the file's footer — no Spark job
+    * ([[Manifest.read]]). The rows are always read so: the file list
+    * and every stats filter over it are driver work at any size (the
+    * `collect()` this read replaces brought the same rows to the
+    * driver). What the gate decides is the manifest's DataFrame view
+    * ([[Manifest.frame]], used by carry unions, [[keyRangeFiles]] and
+    * [[snapshotManifest]]): a LocalRelation over the rows up to
+    * [[Manifest.driverLimit]] files, above it the parquet read of the
+    * version directory, as before. */
+  private[graft] def manifestOf(spark: SparkSession, path: String, v: Long): Manifest =
+    Manifest.read(spark, f"$path/versions/v$v%05d")
 
   /** The file set a version's manifest lists (driver-side planner
     * metadata, one string per file). v == 0 is the empty pre-table
@@ -588,17 +625,18 @@ object Maintenance {
   private[graft] def manifestFiles(spark: SparkSession, path: String,
       v: Long): Set[String] =
     if (v == 0) Set.empty
-    else manifestOf(spark, path, v)
-      .select("file").collect().map(_.getString(0)).toSet
+    else manifestOf(spark, path, v).files.toSet
 
   /** A version's manifest as data — (file, n_rows, min/max stats,
     * batch_id/part where applicable), one row per live data file. The
     * planner-facing diagnostic surface: file-count/fragmentation checks,
     * stats-tightness audits, layout comparisons. Latest version when
-    * `asOf` is None. */
+    * `asOf` is None. A LocalRelation over the rows read on the driver
+    * up to [[Manifest.driverLimit]] files, the parquet read of the
+    * manifest above it. */
   def snapshotManifest(spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame =
-    manifestOf(spark, path, resolveVersion(spark, path, asOf))
+    manifestOf(spark, path, resolveVersion(spark, path, asOf)).frame
 
   /** Create the table: version 1 contains exactly `df`. `statsCols`
     * adds per-file min/max columns to every manifest (enabling
@@ -662,10 +700,10 @@ object Maintenance {
     // files are disjoint from everything another writer can touch), so
     // a lost base race rebases onto the actual head and re-publishes —
     // the data files are already landed, the retry is metadata-only
-    commitSnapshot(df, path, nFiles, fresh => old.unionByName(fresh),
+    commitSnapshot(df, path, nFiles, fresh => old.frame.unionByName(fresh),
       statsCols, clusterBy.map(col), Some(prev), rebaseCarry =
         Some(nb => fresh =>
-          manifestOf(df.sparkSession, path, nb).unionByName(fresh)))
+          manifestOf(df.sparkSession, path, nb).frame.unionByName(fresh)))
   }
 
   /** Full-replace commit (WRITE_TRUNCATE as a version): the new version
@@ -687,27 +725,30 @@ object Maintenance {
     val v = resolveVersion(spark, path, asOf)
     val files = manifestOf(spark, path, v)
       .filter(col(s"min_$c") <= hi && col(s"max_$c") >= lo)
-      .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
+      .files.map(f => s"$path/data/$f")
     val data =
       if (files.isEmpty) readSnapshot(spark, path, Some(v)).filter(lit(false))
-      else spark.read.parquet(files.toIndexedSeq: _*)
+      else Manifest.readFiles(spark, files)
     data.filter(col(c) >= lo && col(c) <= hi)
   }
 
   /** Read the table as of version `asOf` (latest when None). The
-    * manifest's file list is collected driver-side — planning metadata,
-    * one row per data file, exactly what any format's planner holds.
+    * manifest is read on the driver ([[Manifest.read]]) — planning
+    * metadata, one row per data file, exactly what any format's planner
+    * holds — and so is the data schema: up to [[Manifest.driverLimit]]
+    * files the read is given the schema inference would pick, off the
+    * footers ([[Manifest.footerSchema]]), and plans without a job;
+    * above it Spark infers the schema in a job, as any parquet read.
     *
     * `mergeSchema = true` enables schema-evolution reads: an appended
     * batch may carry ADDED columns (the only evolution a file-immutable
     * table supports without rewrite); older files surface NULL for
     * them. Off by default — merged-footer planning costs a footer read
-    * per distinct batch schema, and most reads know their schema. */
+    * per file, and most reads know their schema. */
   def readSnapshot(spark: SparkSession, path: String,
       asOf: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
     val v = resolveVersion(spark, path, asOf)
-    val files = manifestOf(spark, path, v)
-      .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
+    val files = manifestOf(spark, path, v).files.map(f => s"$path/data/$f")
     if (files.isEmpty)
       // a created-but-never-written table ([[snapshotCreateEmpty]]):
       // zero data files, schema from the commit's sidecar — an empty
@@ -715,8 +756,7 @@ object Maintenance {
       emptyOf(spark, recordedSchema(spark, path, v).getOrElse(
         throw new IllegalStateException(
           s"$path version $v lists no data files and records no schema")))
-    else spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(files.toIndexedSeq: _*)
+    else Manifest.readFiles(spark, files, mergeSchema)
   }
 
   /** Expire all but the newest `keep` versions and GC: delete expired
@@ -769,9 +809,7 @@ object Maintenance {
       expire: Seq[Long], kept: Seq[Long], graceMs: Long): (Long, Long) = {
     require(graceMs >= 0L, s"graceMs must be >= 0, got $graceMs")
     val fs = fsFor(spark, path)
-    val referenced = kept.map(v => manifestOf(spark, path, v).select("file"))
-      .reduce(_ unionByName _).distinct()
-      .collect().map(_.getString(0)).toSet
+    val referenced = kept.flatMap(manifestFiles(spark, path, _)).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
     val it = fs.listFiles(dataRoot, true)
@@ -1189,7 +1227,7 @@ object Maintenance {
         // file with the max committed batch id (the watermark is all
         // sinkBatchWatermark needs — per-file provenance died with the
         // rewrite, and a future batch id is always > every past one)
-        val maxId = headManifest.agg(max("batch_id")).head().getLong(0)
+        val maxId = headManifest.longs("batch_id").max
         fresh.withColumn("batch_id", lit(maxId))
       }
     commitSnapshot(head, path, nOut, carry, effStats, clusterBy.map(col), Some(headV))
@@ -1201,13 +1239,13 @@ object Maintenance {
     * without options) must pass to append without breaking the
     * manifest schema — the public face of [[manifestStatsCols]]. */
   def tableStatsCols(spark: SparkSession, path: String): Seq[String] =
-    manifestStatsCols(snapshotManifest(spark, path))
+    manifestStatsCols(manifestOf(spark, path, resolveVersion(spark, path)))
 
   /** The stats columns a manifest carries: every `min_X`/`max_X` pair's
     * X. This is how compaction (and any other whole-table rewrite)
     * re-derives the table's stats contract from the table itself
     * instead of requiring the caller to repeat it. */
-  private def manifestStatsCols(manifest: DataFrame): Seq[String] = {
+  private def manifestStatsCols(manifest: Manifest): Seq[String] = {
     val cols = manifest.columns.toSet
     manifest.columns.toIndexedSeq.collect {
       case c if c.startsWith("min_") && cols.contains("max_" + c.drop(4)) =>
@@ -1261,10 +1299,10 @@ object Maintenance {
       // not a pass (min/max comparisons alone would go NULL and slip
       // it). Zero-row files are exempt: no rows, nothing impure — they
       // legitimately carry NULL stats (see writtenFileStats).
-      val impure = fresh.filter(col("n_rows") > 0 &&
+      val impure = Manifest.of(fresh).filter(col("n_rows") > 0 &&
         (col(s"min_$partCol").isNull || col(s"max_$partCol").isNull ||
           col(s"min_$partCol").cast("string") =!= partValue ||
-          col(s"max_$partCol").cast("string") =!= partValue)).count()
+          col(s"max_$partCol").cast("string") =!= partValue)).size
       if (impure > 0)
         throw new IllegalArgumentException(
           s"$impure written file(s) carry rows outside partition " +
@@ -1276,7 +1314,7 @@ object Maintenance {
         require(old.columns.contains("part"),
           s"$path is not a partitioned snapshot table (no 'part' column " +
             "in its manifest) — it was created by a non-partition writer")
-        old.filter(col("part") =!= partValue).unionByName(stamped)
+        old.filter(col("part") =!= partValue).frame.unionByName(stamped)
       }.getOrElse(stamped)
     }
     commitSnapshot(df, path, nFiles, carry, effStats, clusterBy.map(col),
@@ -1302,10 +1340,10 @@ object Maintenance {
     // the rewrite window must turn into a thrown conflict — an
     // unpinned commit would quietly overwrite it with the stale bytes
     val headV = resolveVersion(spark, path)
-    val mf = snapshotManifest(spark, path, Some(headV))
+    val mf = manifestOf(spark, path, headV)
     require(mf.columns.contains("part"),
       s"$path is not a partitioned snapshot table")
-    require(mf.filter(col("part") === partValue).limit(1).count() > 0,
+    require(!mf.filter(col("part") === partValue).isEmpty,
       s"$path has no files in partition $partCol=$partValue")
     val slice = readSnapshotPartitions(spark, path, Seq(partValue), Some(headV))
     val nOut = targetFileCount(slice, targetBytes,
@@ -1338,16 +1376,16 @@ object Maintenance {
     val mf = manifestOf(spark, path, headV)
     require(mf.columns.contains("part"),
       s"$path is not a partitioned snapshot table")
-    require(mf.filter(col("part") === partValue).limit(1).count() > 0,
+    require(!mf.filter(col("part") === partValue).isEmpty,
       s"$path has no files in partition $partValue")
     val rest = mf.filter(col("part") =!= partValue)
-    require(rest.limit(1).count() > 0,
+    require(!rest.isEmpty,
       s"dropping $partValue would empty $path — replace with an empty " +
         "frame instead (snapshotOverwritePartition keeps layouts; a " +
         "version must list at least one file)")
     val next = headV + 1
     // schema unchanged by a metadata drop — carry the head's record
-    publishManifest(spark, path, rest, next, recordedSchema(spark, path, headV))
+    publishManifest(spark, path, rest.frame, next, recordedSchema(spark, path, headV))
     next
   }
 
@@ -1395,9 +1433,9 @@ object Maintenance {
     require(mf.columns.contains("part"),
       s"$path is not a partitioned snapshot table")
     val files = mf.filter(col("part").isin(values: _*))
-      .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
+      .files.map(f => s"$path/data/$f")
     if (files.isEmpty) readSnapshot(spark, path, Some(v)).filter(lit(false))
-    else spark.read.parquet(files.toIndexedSeq: _*)
+    else Manifest.readFiles(spark, files)
   }
 
   /** The table's commit history as data: one row per live version —
@@ -1405,9 +1443,10 @@ object Maintenance {
     * max_batch_id) — the operational DESCRIBE HISTORY surface: what
     * landed when, how fragmented the table is getting (the compaction
     * trigger), how far the sink watermark advanced. Driver-side over
-    * the manifests (planner metadata, one row per file per version);
-    * committed_at is the manifest dir's mtime — the rename instant,
-    * i.e. the commit point itself. */
+    * the manifests (planner metadata, one row per file per version),
+    * aggregated in Scala over the rows read on the driver — no Spark
+    * job per version; committed_at is the manifest dir's mtime — the
+    * rename instant, i.e. the commit point itself. */
   def snapshotHistory(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val fs = fsFor(spark, path)
@@ -1416,17 +1455,14 @@ object Maintenance {
     var prev = Set.empty[String]
     vs.map { v =>
       val mf = manifestOf(spark, path, v)
-      val hasBatch = mf.columns.contains("batch_id")
-      val agg = mf.agg(count(lit(1)), sum("n_rows"),
-        if (hasBatch) max("batch_id") else lit(null).cast("long")).head()
-      val files = mf.select("file").collect().map(_.getString(0)).toSet
+      val files = mf.files.toSet
       val mtime = fs.getFileStatus(
         new org.apache.hadoop.fs.Path(f"$path/versions/v$v%05d"))
         .getModificationTime
-      val row = (v, new java.sql.Timestamp(mtime), agg.getLong(0),
-        if (agg.isNullAt(1)) 0L else agg.getLong(1),
-        files.diff(prev).size.toLong,
-        if (agg.isNullAt(2)) None else Some(agg.getLong(2)))
+      val row = (v, new java.sql.Timestamp(mtime), mf.size.toLong,
+        mf.longs("n_rows").sum, files.diff(prev).size.toLong,
+        if (mf.columns.contains("batch_id")) mf.longs("batch_id").maxOption
+        else None)
       prev = files
       row
     }.toDF("version", "committed_at", "n_files", "n_rows",
@@ -1538,7 +1574,7 @@ object Maintenance {
     val added = (manifestFiles(spark, path, toV) -- before)
       .toIndexedSeq.sorted.map(f => s"$path/data/$f")
     if (added.isEmpty) readSnapshot(spark, path, Some(toV)).filter(lit(false))
-    else spark.read.parquet(added: _*)
+    else Manifest.readFiles(spark, added)
   }
 
   /** CDC as a driver-visible query: commit the even-event_id half as
@@ -1679,7 +1715,7 @@ object Maintenance {
     resolveVersion(spark, path, Some(toV)) // refuses an expired or unknown target
     val next = resolveVersion(spark, path) + 1
     // the restored head's schema IS the restored version's
-    publishManifest(spark, path, manifestOf(spark, path, toV), next,
+    publishManifest(spark, path, manifestOf(spark, path, toV).frame, next,
       recordedSchema(spark, path, toV))
     next
   }
@@ -1750,7 +1786,8 @@ object Maintenance {
   def snapshotDelete(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long, nFiles: Int, asOf: Option[Long] = None): Long = {
     require(lo <= hi, s"empty delete range [$lo, $hi]")
-    require(manifestStatsCols(snapshotManifest(spark, path, asOf)).contains(c),
+    require(manifestStatsCols(manifestOf(spark, path, resolveVersion(spark, path, asOf)))
+      .contains(c),
       s"$path carries no manifest stats on '$c' — delete needs them to " +
         "prune; write the table with statsCols")
     snapshotDeleteWhere(spark, path, col(c) >= lo && col(c) <= hi, nFiles, asOf)
@@ -1851,7 +1888,7 @@ object Maintenance {
     * cast the analyzer put on a column (an int key against
     * [[snapshotDelete]]'s long bounds) is moved onto the literal, so
     * the conjunct still translates and prunes. */
-  private[graft] def touchedFiles(mf: DataFrame, schemaDf: DataFrame,
+  private[graft] def touchedFiles(mf: Manifest, schemaDf: DataFrame,
       cond: Column): Set[String] = {
     val resolved = org.apache.spark.sql.catalyst.optimizer
       .UnwrapCastInBinaryComparison(schemaDf.filter(cond).queryExecution.analyzed)
@@ -1863,8 +1900,7 @@ object Maintenance {
     val preds = splitConjuncts(resolved)
       .flatMap(org.apache.spark.sql.graft.Bridge.translateFilter)
       .flatMap(manifestFilePredicate(mfCols, _))
-    preds.foldLeft(mf)((m, p) => m.filter(p))
-      .select("file").collect().map(_.getString(0)).toSet
+    preds.foldLeft(mf)((m, p) => m.filter(p)).files.toSet
   }
 
   /** The files of `mf` whose [min_c, max_c] stats hold at least one
@@ -1873,10 +1909,10 @@ object Maintenance {
     * The manifest (one row per file) is broadcast against the keys'
     * distinct values, so an arbitrarily large changeset never collects
     * to the driver; only the matched file names do. */
-  private[graft] def keyRangeFiles(mf: DataFrame, keys: DataFrame,
+  private[graft] def keyRangeFiles(mf: Manifest, keys: DataFrame,
       c: String): Set[String] =
     keys.toDF("__k").distinct()
-      .join(broadcast(mf.select(col("file"), col(s"min_$c"), col(s"max_$c"))),
+      .join(broadcast(mf.frame.select(col("file"), col(s"min_$c"), col(s"max_$c"))),
         col("__k") >= col(s"min_$c") && col("__k") <= col(s"max_$c"))
       .select("file").distinct().collect().map(_.getString(0)).toSet
 
@@ -1916,18 +1952,18 @@ object Maintenance {
     if (files.isEmpty)
       readSnapshot(spark, path, Some(fallbackV), mergeSchema = true)
         .filter(lit(false))
-    else spark.read.option("mergeSchema", "true")
-      .parquet(files.toIndexedSeq.sorted.map(f => s"$path/data/$f"): _*)
+    else Manifest.readFiles(spark,
+      files.toIndexedSeq.sorted.map(f => s"$path/data/$f"), mergeSchema = true)
 
   /** The copy-on-write commit every row-level verb shares: write
     * `replacement` as the new content of the `touched` files, carry
     * every untouched manifest row VERBATIM, commit pinned to `baseV`
     * (a concurrent commit in the read-rewrite window throws). */
   private[graft] def rewriteFilesCommit(spark: SparkSession, path: String,
-      mf: DataFrame, touched: Set[String], replacement: DataFrame,
+      mf: Manifest, touched: Set[String], replacement: DataFrame,
       nFiles: Int, clusterBy: Option[Column], baseV: Long): Long = {
     val carry: DataFrame => DataFrame = fresh =>
-      mf.filter(!col("file").isin(touched.toSeq: _*)).unionByName(fresh)
+      mf.filter(!col("file").isin(touched.toSeq: _*)).frame.unionByName(fresh)
     commitSnapshot(replacement, path, nFiles, carry, manifestStatsCols(mf),
       clusterBy, Some(baseV))
   }
@@ -1937,7 +1973,7 @@ object Maintenance {
     * commit stat-less batches — compact them into a batch table
     * first). */
   private[graft] def dmlBase(spark: SparkSession, path: String,
-      asOf: Option[Long], verb: String): (Long, DataFrame) = {
+      asOf: Option[Long], verb: String): (Long, Manifest) = {
     val baseV = resolveVersion(spark, path, asOf)
     val mf = manifestOf(spark, path, baseV)
     require(!mf.columns.contains("batch_id"),
@@ -1948,7 +1984,7 @@ object Maintenance {
 
   /** Row-level rewrites refuse partitioned tables: re-landing the
     * partition keeps the purity-proof layout. */
-  private[graft] def requireUnpartitioned(path: String, mf: DataFrame,
+  private[graft] def requireUnpartitioned(path: String, mf: Manifest,
       verb: String): Unit =
     require(!mf.columns.contains("part"),
       s"$path is a partitioned snapshot table — $verb a partition by " +
@@ -1958,7 +1994,7 @@ object Maintenance {
   /** The rewrite's re-cluster key: the table's first stats column (its
     * declared layout key), so a rewritten region keeps tight per-file
     * stats instead of decaying to full-domain ranges. */
-  private def dmlClusterBy(mf: DataFrame): Option[Column] =
+  private def dmlClusterBy(mf: Manifest): Option[Column] =
     manifestStatsCols(mf).headOption.map(col)
 
   /** `cond` as an exact partition selector: Some(partition value) when
@@ -1968,7 +2004,7 @@ object Maintenance {
     * [[snapshotOverwritePartition]] enforces at write). Then rows
     * matching `cond` are exactly the partition's files and a DELETE is
     * the metadata-only [[snapshotDropPartition]]. */
-  private def partitionEqualityValue(mf: DataFrame, cond: Column)
+  private def partitionEqualityValue(mf: Manifest, cond: Column)
       : Option[String] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal, EqualTo => CEq}
     // the SQL path hands conditions remapped to UnresolvedAttribute
@@ -1986,7 +2022,7 @@ object Maintenance {
       if (!mfCols.contains(s"min_$c") || !mfCols.contains(s"max_$c")) return None
       val impure = mf.filter(col("n_rows") > 0 &&
         (col(s"min_$c").cast("string") =!= col("part") ||
-          col(s"max_$c").cast("string") =!= col("part"))).limit(1).count()
+          col(s"max_$c").cast("string") =!= col("part"))).size
       // render the literal through Spark's OWN cast-to-string — the
       // exact rendering the purity check above and the partition
       // stamping compare against. The Catalyst-internal value would
@@ -2031,7 +2067,7 @@ object Maintenance {
             "only a bare partition-equality predicate there (the " +
             "metadata-only partition drop); re-land the partition for " +
             "row-level deletes"))
-      if (mf.filter(col("part") === v).limit(1).count() == 0)
+      if (mf.filter(col("part") === v).isEmpty)
         return snapshotVersions(spark, path).last // no such partition: no-op
       return snapshotDropPartition(spark, path, v)
     }
@@ -2167,8 +2203,8 @@ object Maintenance {
     def stateOf(fs: Set[String]): Option[DataFrame] =
       if (fs.isEmpty) None
       else Some(ivmState(
-        spark.read.option("mergeSchema", "true")
-          .parquet(fs.toIndexedSeq.sorted.map(f => s"$path/data/$f"): _*),
+        Manifest.readFiles(spark,
+          fs.toIndexedSeq.sorted.map(f => s"$path/data/$f"), mergeSchema = true),
         keys, valueCol))
     val pos = stateOf(after -- before)
     val neg = stateOf(before -- after).map(_.select(
@@ -2226,8 +2262,7 @@ object Maintenance {
   def committedBatchIds(spark: SparkSession, path: String): Set[Long] = {
     val vs = snapshotVersions(spark, path)
     if (vs.isEmpty) Set.empty
-    else manifestOf(spark, path, vs.last).select("batch_id")
-      .na.drop().distinct().collect().map(_.getLong(0)).toSet
+    else manifestOf(spark, path, vs.last).longs("batch_id").toSet
   }
 
   /** The sink's replay-skip watermark: the highest committed batch id.
@@ -2240,8 +2275,7 @@ object Maintenance {
   def sinkBatchWatermark(spark: SparkSession, path: String): Option[Long] = {
     val vs = snapshotVersions(spark, path)
     if (vs.isEmpty) None
-    else Option(manifestOf(spark, path, vs.last).agg(max("batch_id")).head().get(0))
-      .map(_.asInstanceOf[Long])
+    else manifestOf(spark, path, vs.last).longs("batch_id").maxOption
   }
 
   /** Read a batch-stamped snapshot table CUT at `maxId`: only the head
@@ -2262,9 +2296,9 @@ object Maintenance {
     // snapshotWrite base under later sink batches) — always committed,
     // so always inside the cut
     val files = mf.filter(col("batch_id").isNull || col("batch_id") <= maxId)
-      .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
+      .files.map(f => s"$path/data/$f")
     if (files.isEmpty) readSnapshot(spark, path).filter(lit(false))
-    else spark.read.parquet(files.toIndexedSeq: _*)
+    else Manifest.readFiles(spark, files)
   }
 
   /** The head-version files of a batch-stamped table belonging to
@@ -2276,9 +2310,9 @@ object Maintenance {
     require(mf.columns.contains("batch_id"),
       s"$path is not a batch-stamped snapshot table")
     val files = mf.filter(col("batch_id") === id)
-      .select("file").collect().map(r => s"$path/data/${r.getString(0)}")
+      .files.map(f => s"$path/data/$f")
     if (files.isEmpty) readSnapshot(spark, path).filter(lit(false))
-    else spark.read.parquet(files.toIndexedSeq: _*)
+    else Manifest.readFiles(spark, files)
   }
 
   /** Commit ONE streaming micro-batch as a snapshot append version —
@@ -2309,7 +2343,7 @@ object Maintenance {
         // thrown conflict, never as this batch shadowing its commit
         commitSnapshot(batch, path, nFiles, fresh => {
           val stamped = fresh.withColumn("batch_id", lit(id))
-          prev.map(v => manifestOf(spark, path, v).unionByName(stamped))
+          prev.map(v => manifestOf(spark, path, v).frame.unionByName(stamped))
             .getOrElse(stamped)
         }, Nil, None, Some(prev.getOrElse(0L))): Unit
       } finally batch.unpersist(blocking = false): Unit

@@ -153,8 +153,7 @@ object SnapshotDml {
       mfCols.contains(s"min_$n") && mfCols.contains(s"max_$n")
     }
     // collected only when a branch below needs the whole file list
-    lazy val allFiles: Set[String] =
-      mf.select("file").collect().map(_.getString(0)).toSet
+    lazy val allFiles: Set[String] = mf.files.toSet
     val touched: Set[String] =
       if (nmbs.nonEmpty || eqKeys.isEmpty) allFiles
       else eqKeys.map { case (n, kc) =>

@@ -298,23 +298,23 @@ class SnapshotScanBuilder(spark: SparkSession, path: String, version: Long,
     pushedExprs.flatMap(org.apache.spark.sql.graft.Bridge.translateFilter).toArray
 
   override def build(): Scan = {
-    // CDC reads restrict the version's manifest to the files the diff
-    // base doesn't list — the snapshotChanges planning, with the same
-    // stats pruning then applied ON the delta
+    // the manifest is read and pruned on the driver (no Spark job plans
+    // the scan); CDC reads restrict it to the files the diff base
+    // doesn't list — the snapshotChanges planning, with the same stats
+    // pruning then applied ON the delta
+    val head = Maintenance.manifestOf(spark, path, version)
     val mf = changesFrom match {
-      case None => Maintenance.snapshotManifest(spark, path, Some(version))
+      case None => head
       case Some(f) =>
         val before = Maintenance.manifestFiles(spark, path, f)
-        Maintenance.snapshotManifest(spark, path, Some(version))
-          .filter(!col("file").isin(before.toSeq: _*))
+        head.filter(!col("file").isin(before.toSeq: _*))
     }
     val mfCols = mf.columns.toSet
     // the snapshot layer's one pruning semantics, shared with the DML
     // verbs' pruner so the two surfaces cannot drift
     val pruned = pushedV1.flatMap(Maintenance.manifestFilePredicate(mfCols, _))
       .foldLeft(mf)((m, p) => m.filter(p))
-    val files = pruned.select("file").collect()
-      .map(r => new HPath(s"$path/data/${r.getString(0)}"))
+    val files = pruned.files.map(f => new HPath(s"$path/data/$f"))
     val index = new InMemoryFileIndex(spark, files.toIndexedSeq,
       Map.empty[String, String], Some(dataSchema))
     val psb = ParquetScanBuilder(spark, index, dataSchema, dataSchema, options)

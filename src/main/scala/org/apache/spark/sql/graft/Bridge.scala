@@ -80,6 +80,79 @@ object Bridge {
       org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
       Nil, isStreaming = true))
 
+  /** The Spark schema a parquet footer declares, converted exactly as
+    * schema inference converts it (`ParquetFileFormat
+    * .mergeSchemasInParallel`: the same session flags, the same footer
+    * reader) — so a read given this schema plans the relation inference
+    * would have planned, without inference's Spark job. */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+      file: org.apache.hadoop.fs.Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    val conf = sqlConf(spark)
+    val converter = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file, footer), converter)
+  }
+
+  /** Schema inference's merge of two file schemas (mergeSchema reads):
+    * `a`'s fields first, `b`'s new fields appended, nullability OR'd;
+    * throws on a same-name type conflict, as inference does. */
+  def mergeSchemas(spark: org.apache.spark.sql.SparkSession,
+      a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    a.merge(b, sqlConf(spark).caseSensitiveAnalysis)
+
+  /** A schema with every field nullable — what a file scan reports. */
+  def asNullable(st: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    st.asNullable
+
+  /** Every row of one parquet file, read in the calling thread with
+    * Spark's own parquet reader (`returning_batch=false`: rows, not
+    * columnar batches) — no Spark job. For planner-scale files only
+    * (a manifest): the rows are copied onto the driver heap. */
+  def readParquetRows(spark: org.apache.spark.sql.SparkSession,
+      file: org.apache.hadoop.fs.FileStatus,
+      schema: org.apache.spark.sql.types.StructType)
+      : IndexedSeq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, schema,
+        new org.apache.spark.sql.types.StructType(), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        classic(spark).sessionState.newHadoopConf())
+    val it = read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPath(file.getPath), 0L, file.getLen,
+      Array.empty[String], file.getModificationTime, file.getLen))
+    // outside a task no completion listener closes the reader: drain
+    // and close it here
+    try it.map(_.copy()).toIndexedSeq
+    finally it match {
+      case c: java.io.Closeable => c.close()
+      case _ =>
+    }
+  }
+
+  /** A DataFrame over rows already on the driver: a LocalRelation, so
+    * filters and projections over it fold on the driver. */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  private def classic(spark: org.apache.spark.sql.SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  private def sqlConf(spark: org.apache.spark.sql.SparkSession) =
+    classic(spark).sessionState.conf
+
   /** Register a native function on a live session (the extensions path
     * only works at session build time). */
   def registerFunction(
