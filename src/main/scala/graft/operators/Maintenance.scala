@@ -228,7 +228,7 @@ object Maintenance {
       bits: Int, nFiles: Int): Unit = {
     require(snapshotVersions(df.sparkSession, path).isEmpty,
       s"$path already has versions — use snapshotAppend/snapshotReplace")
-    commitSnapshot(df, path, nFiles, identity, Seq(cx, cy),
+    commitSnapshot(df, path, nFiles, _.frame, Seq(cx, cy),
       Some(zvalue(col(cx), col(cy), bits)), Some(0L)): Unit
   }
 
@@ -331,14 +331,12 @@ object Maintenance {
     * data actually stored). File names are `relPrefix` + basename; rows
     * go in file-name order.
     *
-    * While the batch has at most [[Manifest.driverLimit]] files, the
-    * driver reads their footers: n_rows is the row-group counts' sum and
-    * min/max fold the column-chunk statistics ([[Manifest.footerStats]]
-    * — integral and date stats columns only). Every other case — more
-    * files, a string/decimal/floating/timestamp/boolean stats column, a
-    * chunk without min/max, a legacy-calendar footer — aggregates the
-    * files in a Spark job as before, with the schema taken from the
-    * first footer when the footers were read.
+    * The driver reads the files' footers: n_rows is the row-group
+    * counts' sum and min/max fold the column-chunk statistics
+    * ([[Manifest.footerStats]]). When the footers decline — a
+    * string/decimal/floating/timestamp/boolean stats column, a chunk
+    * without min/max, a legacy-calendar footer — the files are
+    * aggregated in a Spark job instead, given the first footer's schema.
     *
     * ZERO-ROW part files (an empty batch — e.g. a day landed before its
     * test window opens) produce no aggregation group, but they MUST
@@ -353,13 +351,11 @@ object Maintenance {
       relPrefix: String, statsCols: Seq[String]): Manifest = {
     val names = fsFor(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted.toIndexedSeq
-    val footers =
-      if (names.isEmpty || names.size > Manifest.driverLimit(spark)) None
-      else Some(names.map(n => Manifest.footer(spark,
-        new org.apache.hadoop.fs.Path(s"$dir/$n"), rowGroups = true)))
-    val data = footers.fold(spark.read)(fs => spark.read.schema(
+    val footers = names.map(n => Manifest.footer(spark,
+      new org.apache.hadoop.fs.Path(s"$dir/$n"), rowGroups = true))
+    val data = footers.headOption.fold(spark.read)(f => spark.read.schema(
       org.apache.spark.sql.graft.Bridge.parquetFooterSchema(spark,
-        new org.apache.hadoop.fs.Path(s"$dir/${names.head}"), fs.head)))
+        new org.apache.hadoop.fs.Path(s"$dir/${names.head}"), f)))
       .parquet(dir)
     val stats = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
@@ -367,9 +363,8 @@ object Maintenance {
       .groupBy(concat(lit(relPrefix),
         element_at(split(input_file_name(), "/"), -1)).as("file"))
       .agg(count(lit(1)).as("n_rows"), stats: _*)
-    val rows = footers.flatMap(
-      Manifest.footerStats(names, _, agg.schema, statsCols, relPrefix)
-    ).getOrElse {
+    val rows = Manifest.footerStats(names, footers, agg.schema, statsCols,
+        relPrefix).getOrElse {
       // collect ONCE (planner-scale: one row per written file) and fill
       // in the zero-row complement from the FS listing in plain Scala —
       // deriving the complement with an anti-join would embed the stats
@@ -417,10 +412,10 @@ object Maintenance {
     * throws the conflict it actually lost. (Manifest readers never see
     * the marker — parquet reads skip `_`-prefixed files.) */
   private[graft] def commitSnapshot(df: DataFrame, path: String, nFiles: Int,
-      carry: DataFrame => DataFrame, statsCols: Seq[String],
+      carry: Manifest => DataFrame, statsCols: Seq[String],
       clusterBy: Option[Column], base: Option[Long] = None,
       shape: Option[DataFrame => DataFrame] = None,
-      rebaseCarry: Option[Long => DataFrame => DataFrame] = None): Long = {
+      rebaseCarry: Option[Long => Manifest => DataFrame] = None): Long = {
     require(nFiles > 0, s"nFiles must be positive, got $nFiles")
     // the retry path below rebases FROM curBase.get — a carry factory
     // without a pinned base would NPE-at-conflict instead of surfacing
@@ -431,10 +426,8 @@ object Maintenance {
     val batch = s"b${java.util.UUID.randomUUID().toString.take(12)}"
     // rows-in counter riding the write job itself (map side, below the
     // layout shuffle — zero extra pass): compared after the write
-    // against Σ per-file n_rows of the just-written files — the row
-    // counts their parquet footers declare, read on the driver while
-    // the batch has at most Manifest.driverLimit files, else counted by
-    // the stats aggregation's job (see writtenFileStats) — so ANY torn
+    // against Σ per-file n_rows of the just-written files (their
+    // footers' row counts, see writtenFileStats) — so ANY torn
     // write — rows lost or duplicated between the scan and the durable
     // parquet, whatever the cause (shuffle pathology, partial task
     // output, filesystem lies) — is structurally un-committable and
@@ -469,7 +462,7 @@ object Maintenance {
           s"$rowsIn input rows but the durable files carry $rowsWritten " +
           "— refusing to commit a silently wrong table (orphaned batch " +
           "files are vacuum-collectable)")
-    def attempt(b: Option[Long], carryFn: DataFrame => DataFrame): Long = {
+    def attempt(b: Option[Long], carryFn: Manifest => DataFrame): Long = {
       val next = b.map(_ + 1).getOrElse(
         snapshotVersions(spark, path).lastOption.getOrElse(0L) + 1)
       // the new version's table schema: the carried base's recorded
@@ -483,7 +476,7 @@ object Maintenance {
           case Some(v) => recordedSchema(spark, path, v)
             .flatMap(prev => unionSchema(prev, df.schema))
         }
-      publishManifest(spark, path, carryFn(newFiles.frame), next, tableSchema)
+      publishManifest(spark, path, carryFn(newFiles), next, tableSchema)
       next
     }
     // Optimistic retry: a commit whose carry COMMUTES with any
@@ -606,14 +599,10 @@ object Maintenance {
 
   /** Version `v`'s manifest, read in the driver thread with Spark's own
     * parquet reader, its schema off the file's footer — no Spark job
-    * ([[Manifest.read]]). The rows are always read so: the file list
-    * and every stats filter over it are driver work at any size (the
-    * `collect()` this read replaces brought the same rows to the
-    * driver). What the gate decides is the manifest's DataFrame view
+    * ([[Manifest.read]]). The file list and every stats filter over it
+    * are driver work over these rows; the manifest's DataFrame view
     * ([[Manifest.frame]], used by carry unions, [[keyRangeFiles]] and
-    * [[snapshotManifest]]): a LocalRelation over the rows up to
-    * [[Manifest.driverLimit]] files, above it the parquet read of the
-    * version directory, as before. */
+    * [[snapshotManifest]]) is a LocalRelation over them. */
   private[graft] def manifestOf(spark: SparkSession, path: String, v: Long): Manifest =
     Manifest.read(spark, f"$path/versions/v$v%05d")
 
@@ -631,9 +620,7 @@ object Maintenance {
     * batch_id/part where applicable), one row per live data file. The
     * planner-facing diagnostic surface: file-count/fragmentation checks,
     * stats-tightness audits, layout comparisons. Latest version when
-    * `asOf` is None. A LocalRelation over the rows read on the driver
-    * up to [[Manifest.driverLimit]] files, the parquet read of the
-    * manifest above it. */
+    * `asOf` is None. A LocalRelation over the rows read on the driver. */
   def snapshotManifest(spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame =
     manifestOf(spark, path, resolveVersion(spark, path, asOf)).frame
@@ -682,7 +669,7 @@ object Maintenance {
       s"$path already has versions — use snapshotAppend/snapshotReplace")
     // base = 0: two racing creators conflict on v00001 instead of both
     // "succeeding" with one table silently shadowed
-    commitSnapshot(df, path, nFiles, identity, statsCols, clusterBy.map(col), Some(0L))
+    commitSnapshot(df, path, nFiles, _.frame, statsCols, clusterBy.map(col), Some(0L))
   }
 
   /** Append-only commit: the new version sees the latest version's
@@ -700,10 +687,10 @@ object Maintenance {
     // files are disjoint from everything another writer can touch), so
     // a lost base race rebases onto the actual head and re-publishes —
     // the data files are already landed, the retry is metadata-only
-    commitSnapshot(df, path, nFiles, fresh => old.frame.unionByName(fresh),
+    commitSnapshot(df, path, nFiles, fresh => old.frame.unionByName(fresh.frame),
       statsCols, clusterBy.map(col), Some(prev), rebaseCarry =
         Some(nb => fresh =>
-          manifestOf(df.sparkSession, path, nb).frame.unionByName(fresh)))
+          manifestOf(df.sparkSession, path, nb).frame.unionByName(fresh.frame)))
   }
 
   /** Full-replace commit (WRITE_TRUNCATE as a version): the new version
@@ -711,7 +698,7 @@ object Maintenance {
     * files until [[vacuumSnapshots]] expires them. */
   def snapshotReplace(df: DataFrame, path: String, nFiles: Int,
       statsCols: Seq[String] = Nil, clusterBy: Option[String] = None): Long =
-    commitSnapshot(df, path, nFiles, identity, statsCols, clusterBy.map(col))
+    commitSnapshot(df, path, nFiles, _.frame, statsCols, clusterBy.map(col))
 
   /** Range scan of a snapshot version with manifest pruning — the
     * [[prunedRead]] mechanic composed with time travel, i.e. what a
@@ -735,10 +722,9 @@ object Maintenance {
   /** Read the table as of version `asOf` (latest when None). The
     * manifest is read on the driver ([[Manifest.read]]) — planning
     * metadata, one row per data file, exactly what any format's planner
-    * holds — and so is the data schema: up to [[Manifest.driverLimit]]
-    * files the read is given the schema inference would pick, off the
-    * footers ([[Manifest.footerSchema]]), and plans without a job;
-    * above it Spark infers the schema in a job, as any parquet read.
+    * holds — and the read is given the schema inference would pick,
+    * off the footers ([[Manifest.footerSchema]]), so it plans without
+    * a job.
     *
     * `mergeSchema = true` enables schema-evolution reads: an appended
     * batch may carry ADDED columns (the only evolution a file-immutable
@@ -1004,7 +990,7 @@ object Maintenance {
         s""""colCuts":[${resolved.indices.map(j => cutsOf(j).size).mkString(",")}],""" +
         s""""zcuts":${zcuts.size},"zcutHead":[${zcuts.take(8).mkString(",")}],""" +
         s""""ranges":[${resolved.indices.map { j => val (l, h) = rng(j); s"[$l,$h]" }.mkString(",")}]}"""
-    commitSnapshot(head, path, nParts, identity, effStats, None, Some(headV),
+    commitSnapshot(head, path, nParts, _.frame, effStats, None, Some(headV),
       shape = Some(shaper))
   }
 
@@ -1220,15 +1206,15 @@ object Maintenance {
       if (statsCols.nonEmpty) statsCols
       else manifestStatsCols(headManifest)
     val isSink = headManifest.columns.contains("batch_id")
-    val carry: DataFrame => DataFrame =
-      if (!isSink) identity
+    val carry: Manifest => DataFrame =
+      if (!isSink) _.frame
       else fresh => {
         // preserve the sink's replay-skip memory: stamp every compacted
         // file with the max committed batch id (the watermark is all
         // sinkBatchWatermark needs — per-file provenance died with the
         // rewrite, and a future batch id is always > every past one)
         val maxId = headManifest.longs("batch_id").max
-        fresh.withColumn("batch_id", lit(maxId))
+        fresh.frame.withColumn("batch_id", lit(maxId))
       }
     commitSnapshot(head, path, nOut, carry, effStats, clusterBy.map(col), Some(headV))
   }
@@ -1293,13 +1279,13 @@ object Maintenance {
     val effStats =
       if (statsCols.contains(partCol)) statsCols else statsCols :+ partCol
     val prev = base.orElse(snapshotVersions(spark, path).lastOption)
-    val carry: DataFrame => DataFrame = fresh => {
+    val carry: Manifest => DataFrame = fresh => {
       // isNull arms: a file holding rows whose partition column is NULL
       // has NULL stats — that's rows OUTSIDE the declared partition,
       // not a pass (min/max comparisons alone would go NULL and slip
       // it). Zero-row files are exempt: no rows, nothing impure — they
       // legitimately carry NULL stats (see writtenFileStats).
-      val impure = Manifest.of(fresh).filter(col("n_rows") > 0 &&
+      val impure = fresh.filter(col("n_rows") > 0 &&
         (col(s"min_$partCol").isNull || col(s"max_$partCol").isNull ||
           col(s"min_$partCol").cast("string") =!= partValue ||
           col(s"max_$partCol").cast("string") =!= partValue)).size
@@ -1308,7 +1294,7 @@ object Maintenance {
           s"$impure written file(s) carry rows outside partition " +
             s"$partCol=$partValue — a partition overwrite must land only " +
             "its own partition's rows")
-      val stamped = fresh.withColumn("part", lit(partValue))
+      val stamped = fresh.frame.withColumn("part", lit(partValue))
       prev.map { v =>
         val old = manifestOf(spark, path, v)
         require(old.columns.contains("part"),
@@ -1962,8 +1948,8 @@ object Maintenance {
   private[graft] def rewriteFilesCommit(spark: SparkSession, path: String,
       mf: Manifest, touched: Set[String], replacement: DataFrame,
       nFiles: Int, clusterBy: Option[Column], baseV: Long): Long = {
-    val carry: DataFrame => DataFrame = fresh =>
-      mf.filter(!col("file").isin(touched.toSeq: _*)).frame.unionByName(fresh)
+    val carry: Manifest => DataFrame = fresh =>
+      mf.filter(!col("file").isin(touched.toSeq: _*)).frame.unionByName(fresh.frame)
     commitSnapshot(replacement, path, nFiles, carry, manifestStatsCols(mf),
       clusterBy, Some(baseV))
   }
@@ -2342,7 +2328,7 @@ object Maintenance {
         // (a second sink instance, a racing compaction) surfaces as a
         // thrown conflict, never as this batch shadowing its commit
         commitSnapshot(batch, path, nFiles, fresh => {
-          val stamped = fresh.withColumn("batch_id", lit(id))
+          val stamped = fresh.frame.withColumn("batch_id", lit(id))
           prev.map(v => manifestOf(spark, path, v).frame.unionByName(stamped))
             .getOrElse(stamped)
         }, Nil, None, Some(prev.getOrElse(0L))): Unit
@@ -2368,7 +2354,7 @@ object Maintenance {
     if (!sinkBatchWatermark(spark, path).exists(_ >= id)) {
       val prev = snapshotVersions(spark, path).lastOption
       commitSnapshot(batch, path, nFiles,
-        fresh => fresh.withColumn("batch_id", lit(id)),
+        fresh => fresh.frame.withColumn("batch_id", lit(id)),
         Nil, None, Some(prev.getOrElse(0L))): Unit
     }
   }

@@ -23,19 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * them on their stats and aggregating the bookkeeping columns are
   * driver work over these rows — no Spark job runs for them.
   *
-  * [[frame]] is the manifest as a DataFrame, for the plans that go on
-  * into a job (a commit's carry union, the MERGE key-range join, the
-  * public [[Maintenance.snapshotManifest]]): a LocalRelation over the
-  * same rows while the manifest lists at most
-  * `spark.sql.sources.parallelPartitionDiscovery.threshold` files —
-  * the cutoff Spark itself uses between listing files on the driver
-  * and listing them in a job — and above it the parquet read of the
-  * version's directory that a Spark job scans. */
+  * [[frame]] is the manifest as a DataFrame, a LocalRelation over the
+  * same rows, for the plans that go on into a job (a commit's carry
+  * union, the MERGE key-range join, the public
+  * [[Maintenance.snapshotManifest]]). */
 private[graft] final class Manifest private (
     spark: SparkSession,
     val schema: StructType,
-    val rows: IndexedSeq[InternalRow],
-    jobView: Option[() => DataFrame]) {
+    val rows: IndexedSeq[InternalRow]) {
 
   def columns: Array[String] = schema.fieldNames
   def size: Int = rows.size
@@ -71,24 +66,17 @@ private[graft] final class Manifest private (
     val p = Predicate.createInterpreted(
       BindReferences.bindReference(condition, new AttributeSeq(attrs)))
     p.initialize(0)
-    new Manifest(spark, schema, rows.filter(p.eval),
-      jobView.map(v => () => v().filter(cond)))
+    new Manifest(spark, schema, rows.filter(p.eval))
   }
 
-  def frame: DataFrame =
-    jobView.fold(Bridge.localFrame(spark, schema, rows))(_())
+  def frame: DataFrame = Bridge.localFrame(spark, schema, rows)
 }
 
 private[graft] object Manifest {
 
-  /** The largest file count this layer reads metadata for on the
-    * driver; above it the Spark-job paths run. */
-  def driverLimit(spark: SparkSession): Int =
-    spark.sessionState.conf.parallelPartitionDiscoveryThreshold
-
   def local(spark: SparkSession, schema: StructType,
       rows: IndexedSeq[InternalRow]): Manifest =
-    new Manifest(spark, schema, rows, None)
+    new Manifest(spark, schema, rows)
 
   /** The manifest committed in the version directory `dir`, read in the
     * calling thread: its parquet file(s) in path order with Spark's own
@@ -105,19 +93,7 @@ private[graft] object Manifest {
       throw new IllegalStateException(s"$dir holds no manifest file")
     val schema = Bridge.asNullable(Bridge.parquetFooterSchema(spark,
       files.head.getPath, footer(spark, files.head.getPath, rowGroups = false)))
-    val rows = files.flatMap(Bridge.readParquetRows(spark, _, schema))
-    new Manifest(spark, schema, rows,
-      if (rows.size <= driverLimit(spark)) None
-      else Some(() => spark.read.parquet(dir)))
-  }
-
-  /** The manifest behind a frame [[local]] built — the just-written
-    * file stats a commit hands its carry — read straight off the plan. */
-  def of(df: DataFrame): Manifest = df.queryExecution.analyzed match {
-    case l: LocalRelation =>
-      local(df.sparkSession, DataTypeUtils.fromAttributes(l.output), l.data.toIndexedSeq)
-    case other => throw new IllegalArgumentException(
-      s"not a manifest frame held on the driver: ${other.nodeName}")
+    new Manifest(spark, schema, files.flatMap(Bridge.readParquetRows(spark, _, schema)))
   }
 
   // the names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName)
@@ -133,13 +109,11 @@ private[graft] object Manifest {
   /** The schema Spark's parquet inference gives a read of `files` (full
     * paths), from footers read on the driver: the first file in path
     * order (the one inference reads), or with `mergeSchema` every
-    * file's footer folded in path order (inference's merge). None
-    * above [[driverLimit]] — the read then infers in its own job, as
-    * before — and when the footers do not merge, so that inference
-    * raises its own error. */
+    * file's footer folded in path order (inference's merge). None when
+    * the footers do not merge, so that inference raises its own error. */
   def footerSchema(spark: SparkSession, files: Seq[String],
       mergeSchema: Boolean): Option[StructType] =
-    if (files.isEmpty || files.size > driverLimit(spark)) None
+    if (files.isEmpty) None
     else {
       val sorted = files.map(new Path(_)).sortBy(_.toString)
       val schemas = (if (mergeSchema) sorted else sorted.take(1)).map(p =>
@@ -150,11 +124,17 @@ private[graft] object Manifest {
   /** `spark.read.parquet(files)` given the schema [[footerSchema]]
     * derives, so planning the read runs no inference job. */
   def readFiles(spark: SparkSession, files: Seq[String],
-      mergeSchema: Boolean = false): DataFrame = {
+      mergeSchema: Boolean): DataFrame = {
     val reader = spark.read.option("mergeSchema", mergeSchema.toString)
     footerSchema(spark, files, mergeSchema).fold(reader)(reader.schema)
       .parquet(files: _*)
   }
+
+  /** [[readFiles]] merging schemas as the session's
+    * `spark.sql.parquet.mergeSchema` says, as a plain
+    * `spark.read.parquet(files)` does. */
+  def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    readFiles(spark, files, spark.sessionState.conf.isParquetSchemaMergingEnabled)
 
   /** The key Spark writes into a footer whose dates and timestamps were
     * rebased to the legacy hybrid calendar. */

@@ -36,14 +36,14 @@ class Round10Spec extends SparkSpec {
       // an invisible dot-dir — a silent lost update.
       val winnerRows = ev.filter(col("event_id") % 2 === 1)
       val v2 = Maintenance.commitSnapshot(winnerRows, p, 2,
-        fresh => spark.read.parquet(s"$p/versions/v00001").unionByName(fresh),
+        fresh => spark.read.parquet(s"$p/versions/v00001").unionByName(fresh.frame),
         Nil, None, Some(1L))
       assert(v2 == 2L)
       val winnerManifest = parquetFiles(new java.io.File(stage, "versions/v00002"))
       val loserRows = ev.filter(col("event_id") % 3 === 0)
       val err = intercept[IllegalStateException] {
         Maintenance.commitSnapshot(loserRows, p, 2,
-          fresh => spark.read.parquet(s"$p/versions/v00001").unionByName(fresh),
+          fresh => spark.read.parquet(s"$p/versions/v00001").unionByName(fresh.frame),
           Nil, None, Some(1L))
       }
       assert(err.getMessage.contains("lost the race"))

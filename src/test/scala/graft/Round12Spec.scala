@@ -134,7 +134,7 @@ class Round12Spec extends SparkSpec {
       val ev = Tables.events(spark, sfDir).select("event_id", "value")
       val e = intercept[SnapshotTornWrite] {
         Maintenance.commitSnapshot(ev, s"$p/t", nFiles = 4,
-          identity, Nil, None, Some(0L),
+          _.frame, Nil, None, Some(0L),
           // a fault injection: the shape contract is row-preserving,
           // this one silently drops half the rows — exactly what a
           // shuffle pathology would do

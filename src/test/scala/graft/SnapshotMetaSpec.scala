@@ -12,14 +12,11 @@ import graft.operators.Maintenance._
 /** Snapshot metadata is read in the driver thread: a version's
   * manifest, the schema of the data files a read plans, and the stats
   * of the files a commit just wrote come from manifest rows and parquet
-  * footers without a Spark job, up to
-  * `spark.sql.sources.parallelPartitionDiscovery.threshold` files.
-  * These specs pin that each driver path gives exactly what the job
-  * path it replaces gives, that the job paths still run above the
-  * threshold, and how many jobs a commit and a read take. */
+  * footers without a Spark job. These specs pin that each driver path
+  * gives exactly what the job path it replaces gives, that stats the
+  * footers cannot give still take the aggregation, and how many jobs a
+  * commit and a read take. */
 class SnapshotMetaSpec extends SparkSpec {
-
-  private val Threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
   private def withStage[T](prefix: String)(body: String => T): T = {
     val stage = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -96,14 +93,19 @@ class SnapshotMetaSpec extends SparkSpec {
       for (t <- Seq(stats, parted, sink, empty, evolved)) assertManifestsMatchParquet(t)
 
       // the data schema a read plans equals what inference over the
-      // same files gives (threshold 0: the job path), plain and merged
+      // same files gives, plain and merged
       for (t <- Seq(stats, parted, sink, empty, evolved); merge <- Seq(false, true)) {
+        val files = manifestOf(spark, t, snapshotVersions(spark, t).last).files
+          .map(f => s"$t/data/$f")
         val driver = readSnapshot(spark, t, mergeSchema = merge).schema
-        val job = CacheScope.withConf(spark, Threshold -> "0")(
-          readSnapshot(spark, t, mergeSchema = merge).schema)
-        assert(driver == job, s"$t mergeSchema=$merge: $driver vs $job")
+        val inferred = spark.read.option("mergeSchema", merge.toString)
+          .parquet(files: _*).schema
+        assert(driver == inferred, s"$t mergeSchema=$merge: $driver vs $inferred")
       }
       assert(readSnapshot(spark, evolved, mergeSchema = true).columns.toSeq == Seq("k", "g", "v"))
+      // pruned reads merge as the session's spark.sql.parquet.mergeSchema says
+      CacheScope.withConf(spark, "spark.sql.parquet.mergeSchema" -> "true")(
+        assert(readSnapshotRange(spark, evolved, "k", 0L, 2000L).columns.toSeq == Seq("k", "g", "v")))
     }
   }
 
@@ -134,25 +136,20 @@ class SnapshotMetaSpec extends SparkSpec {
         date_add(lit(java.sql.Date.valueOf("2024-01-01")), (col("id") % 400).cast("int"))
           .as("k_date"),
         lit(null).cast("int").as("k_null"))
-      for ((t, threshold) <- Seq("driver" -> "32", "job" -> "0")) {
-        val p = s"$stage/$t"
-        CacheScope.withConf(spark, Threshold -> threshold, "parquet.block.size" -> "4096") {
-          snapshotWrite(df, p, nFiles = 2, statsCols = cols)
-          snapshotAppend(df.limit(0), p, nFiles = 1, statsCols = cols)
-        }
-        val mf = snapshotManifest(spark, p).orderBy("file").collect().toSeq
-        assert(mf.size == 3)
-        assert(mf.count(_.getLong(1) == 0L) == 1, "one zero-row file")
-        for (r <- mf)
-          assert(r.toSeq.tail == aggregated(s"$p/data/${r.getString(0)}", cols),
-            s"$t ${r.getString(0)}")
-        val groups = mf.filter(_.getLong(1) > 0).map(r => Manifest.footer(spark,
-          new org.apache.hadoop.fs.Path(s"$p/data/${r.getString(0)}"), rowGroups = true)
-          .getBlocks.size)
-        assert(groups.forall(_ > 1), s"every non-empty file spans several row groups: $groups")
+      val p = s"$stage/t"
+      CacheScope.withConf(spark, "parquet.block.size" -> "4096") {
+        snapshotWrite(df, p, nFiles = 2, statsCols = cols)
+        snapshotAppend(df.limit(0), p, nFiles = 1, statsCols = cols)
       }
-      assert(spark.read.parquet(versionDir(s"$stage/driver", 2L)).schema ==
-        spark.read.parquet(versionDir(s"$stage/job", 2L)).schema)
+      val mf = snapshotManifest(spark, p).orderBy("file").collect().toSeq
+      assert(mf.size == 3)
+      assert(mf.count(_.getLong(1) == 0L) == 1, "one zero-row file")
+      for (r <- mf)
+        assert(r.toSeq.tail == aggregated(s"$p/data/${r.getString(0)}", cols), r.getString(0))
+      val groups = mf.filter(_.getLong(1) > 0).map(r => Manifest.footer(spark,
+        new org.apache.hadoop.fs.Path(s"$p/data/${r.getString(0)}"), rowGroups = true)
+        .getBlocks.size)
+      assert(groups.forall(_ > 1), s"every non-empty file spans several row groups: $groups")
     }
   }
 
@@ -188,19 +185,18 @@ class SnapshotMetaSpec extends SparkSpec {
     }
   }
 
-  /** A version's manifest rows with each batch dir numbered by first
-    * appearance and the write job's uuid dropped from part-file names —
-    * two tables built by the same commits then compare row for row. */
-  private def canonicalManifests(p: String): Seq[(StructType, Seq[Seq[Any]])] = {
+  /** A version's manifest rows, projected onto `cols`, with each batch
+    * dir numbered by first appearance and the write job's uuid dropped
+    * from part-file names — two tables built by the same commits then
+    * compare row for row. */
+  private def canonicalManifests(p: String, cols: Seq[String]): Seq[Seq[Any]] = {
     val batches = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    snapshotVersions(spark, p).map { v =>
-      val df = spark.read.parquet(versionDir(p, v))
-      val rows = df.collect().toSeq.map { r =>
-        val Array(b, part) = r.getAs[String]("file").split("/", 2)
+    snapshotVersions(spark, p).flatMap { v =>
+      spark.read.parquet(versionDir(p, v)).select(cols.map(col): _*).collect().toSeq.map { r =>
+        val Array(b, part) = r.getString(0).split("/", 2)
         val id = batches.getOrElseUpdate(b, batches.size)
-        s"$id/${part.replaceAll("-[0-9a-f]{8}-[0-9a-f-]{27}-", "-")}" +: r.toSeq.tail
+        (v +: s"$id/${part.replaceAll("-[0-9a-f]{8}-[0-9a-f-]{27}-", "-")}" +: r.toSeq.tail).toSeq
       }
-      (df.schema, rows)
     }
   }
 
@@ -211,55 +207,49 @@ class SnapshotMetaSpec extends SparkSpec {
     java.nio.file.Files.readAllBytes(files.head.toPath)
   }
 
-  test("threshold 0 runs the job paths and commits the same manifests") {
-    withStage("graft_meta_gate_") { stage =>
-      // data commits: the same sequence under the default threshold and
-      // under 0, the manifests compared row for row
-      val base = spark.range(0, 400)
-        .select(col("id").as("k"), (col("id") % 7).as("g"), (col("id") * 1.5).as("v"))
+  test("commits on footer stats and on the aggregation fallback publish the same manifests") {
+    withStage("graft_meta_paths_") { stage =>
+      // the same data and commits twice: once with bigint stats only
+      // (footer stats), once with a string stats column beside them,
+      // which sends every commit's stats through the aggregation
+      val base = spark.range(0, 400).select(col("id").as("k"), (col("id") % 7).as("g"),
+        (col("id") * 1.5).as("v"), format_string("s%05d", col("id")).as("s"))
       val changes = spark.range(0, 400).filter(col("id") % 40 === 3).select(
         col("id").as("k"), lit(99L).as("g"), lit(0.25).as("v"),
+        format_string("s%05d", col("id")).as("s"),
         when(col("id") % 80 === 3, lit("D")).otherwise(lit("U")).as("op"))
-      def commits(p: String): Unit = {
+      def commits(p: String, statsCols: Seq[String]): Unit = {
         snapshotWrite(base.filter(col("k") < 300), p, nFiles = 4,
-          statsCols = Seq("k"), clusterBy = Some("k"))
+          statsCols = statsCols, clusterBy = Some("k"))
         snapshotAppend(base.filter(col("k") >= 300), p, nFiles = 2,
-          statsCols = Seq("k"), clusterBy = Some("k"))
+          statsCols = statsCols, clusterBy = Some("k"))
         snapshotMerge(spark, p, changes, "k", nFiles = 2)
         snapshotDeleteWhere(spark, p, col("k").between(100, 140))
         compactSnapshot(spark, p, targetBytes = 1L << 20)
       }
-      commits(s"$stage/driver")
-      val (_, jobReadJobs) = CacheScope.withConf(spark, Threshold -> "0") {
-        commits(s"$stage/job")
-        jobsDuring(readSnapshot(spark, s"$stage/job").collect())
-      }
-      val (_, driverReadJobs) = jobsDuring(readSnapshot(spark, s"$stage/driver").collect())
-      assert(jobReadJobs > driverReadJobs,
-        s"threshold 0 must plan the read in jobs: $jobReadJobs vs $driverReadJobs")
-      val (a, b) = (canonicalManifests(s"$stage/driver"), canonicalManifests(s"$stage/job"))
-      assert(a.size == 5 && b.size == 5)
-      for (((sa, ra), (sb, rb)) <- a.zip(b)) {
-        assert(sa == sb)
-        assert(ra == rb)
-      }
+      commits(s"$stage/footer", Seq("k"))
+      commits(s"$stage/agg", Seq("k", "s"))
+      assert(tableStatsCols(spark, s"$stage/agg") == Seq("k", "s"))
+      val cols = Seq("file", "n_rows", "min_k", "max_k")
+      val (a, b) = (canonicalManifests(s"$stage/footer", cols),
+        canonicalManifests(s"$stage/agg", cols))
+      assert(a.map(_.head).distinct == (1L to 5L))
+      assert(a == b)
+      assert(spark.read.parquet(versionDir(s"$stage/footer", 5L)).schema ==
+        spark.read.parquet(versionDir(s"$stage/agg", 5L)).drop("min_s", "max_s").schema)
 
       // metadata-only commits (partition drop, restore) write their
-      // manifest from an existing one's rows: byte-identical either way
+      // manifest from an existing one's rows: a restore republishes the
+      // restored version byte for byte
       val p = s"$stage/parted"
       val withShard = base.withColumn("shard", (col("k") % 3).cast("string"))
       for (s <- Seq("0", "1", "2"))
         snapshotOverwritePartition(withShard.filter(col("shard") === s), p,
           "shard", s, nFiles = 2, statsCols = Seq("k"))
       val dropped = snapshotDropPartition(spark, p, "1")
-      snapshotRestore(spark, p, 3L)
-      val droppedJob = CacheScope.withConf(spark, Threshold -> "0")(
-        snapshotDropPartition(spark, p, "1"))
-      assert(manifestBytes(p, dropped).sameElements(manifestBytes(p, droppedJob)))
+      assert(manifestFiles(spark, p, dropped) ==
+        manifestOf(spark, p, 3L).filter(col("part") =!= "1").files.toSet)
       val restored = snapshotRestore(spark, p, 2L)
-      val restoredJob = CacheScope.withConf(spark, Threshold -> "0")(
-        snapshotRestore(spark, p, 2L))
-      assert(manifestBytes(p, restored).sameElements(manifestBytes(p, restoredJob)))
       assert(manifestBytes(p, restored).sameElements(manifestBytes(p, 2L)))
     }
   }
