@@ -64,8 +64,19 @@ object CacheScope {
     * executor loss, at the cost of one write+read of the generation per
     * round. Retirement ([[freeCheckpoint]]) deletes the superseded
     * generation's files, so the directory holds at most two
-    * generations per operator at any time. */
+    * generations per operator at any time.
+    *
+    * Every generation is also registered for release: a loop frees
+    * superseded generations as it goes, and `releaseAll()` frees the
+    * rest — the one the caller reads, or the live one of a loop that
+    * threw. */
   def checkpoint(df: DataFrame): DataFrame = {
+    val cp = materialize(df)
+    defer(() => freeCheckpoint(cp))
+    cp
+  }
+
+  private def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) if dir.nonEmpty =>
@@ -92,7 +103,7 @@ object CacheScope {
           try df.checkpoint()
           finally df.unpersist(blocking = false)
         }
-      case _ => df.localCheckpoint()
+      case _ => org.apache.spark.sql.graft.Bridge.localCheckpoint(df)
     }
   }
 

@@ -26,12 +26,36 @@ import org.apache.spark.sql.SparkSession
   *    it near 2-3× total executor cores (or rely on AQE coalescing
   *    from a higher initial count) so the largest shuffled stage's
   *    partitions fit in executor memory — the spill lever.
+  *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]:
+  *    Spark keeps the classes it generates in one JVM-wide LRU of 100
+  *    entries by default, fewer than one pass of graft work generates.
+  *    Measured distinct classes (Janino compiles with an unbounded
+  *    cache): a switchback pass of the seven headliners at sf0.01 113,
+  *    a lakehouse pass of daily commits, MERGE, DELETE and OPTIMIZE 95,
+  *    the 19 bench headliners at sf0.01 534, and a full `graft.Verify`
+  *    of all 223 queries at sf0.01 4,358. With 100 entries every
+  *    repeated pass in a long-lived session — the daily re-run —
+  *    compiled its classes again (58 per warm switchback pass), and the
+  *    JIT compiled them again after that. 2,000 holds the largest of
+  *    those passes with room to spare; a cached class costs about 31 KB
+  *    of heap and 9 KB of metaspace (the full Verify's 4,358 held
+  *    136 MB and 37 MB), so a full cache costs about 60 MB and 17 MB.
+  *    The value is a bound, not 0: in Spark 4.1 a 0 removes the bound
+  *    instead of turning the cache off. The key is static, and
+  *    `CodeGenerator` builds its LRU once per JVM from the conf of the
+  *    session active when the first class is generated: a session
+  *    created without graft earlier in the same JVM keeps 100, and
+  *    `spark.conf.set` refuses the key.
   *
   * Deliberately NOT set here: memory sizes, executor counts, and
   * `spark.sql.files.maxPartitionBytes` — cluster-shape decisions that
   * belong to deployment, not the library.
   */
 object GraftSession {
+
+  /** Bound of Spark's JVM-wide generated-class cache (see "Why each
+    * setting"). */
+  val CodegenCacheEntries = 2000
 
   /** Cluster-oriented builder: recommended conf + graft extensions,
     * master/deploy left to spark-submit. */
@@ -56,6 +80,7 @@ object GraftSession {
       // (oracle-pinned).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .withExtensions(new graft.plans.GraftExtensions)
 
   /** Local session for tests/benchmarks/profilers: `cores` threads,

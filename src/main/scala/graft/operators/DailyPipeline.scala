@@ -98,12 +98,7 @@ object DailyPipeline {
     // the landing dirs are consumed before release: snapshot the result
     // into executor blocks (localCheckpoint — distributed, no driver
     // round-trip) so the returned frame outlives the deferred cleanup
-    val snap = {
-      import graft.CacheScope.CheckpointOps
-      out.graftCheckpoint()
-    }
-    graft.CacheScope.defer(() => graft.CacheScope.freeCheckpoint(snap))
-    snap
+    graft.CacheScope.checkpoint(out)
   }
 
   private val pipelineDailyOracle =

@@ -918,7 +918,6 @@ object Dedup {
       converged = chg == 0L
       i += 1
     }
-    graft.CacheScope.defer(() => graft.CacheScope.freeCheckpoint(labels))
     labels
   }
 

@@ -220,9 +220,6 @@ object Graph {
         ranks = cp
       }
     }
-    // the final generation outlives this method (the caller forces the
-    // readout) — retire it with the operator run, CC-style
-    lastCp.foreach(cp => CacheScope.defer(() => CacheScope.freeCheckpoint(cp)))
     // TakeOrderedAndProject (distributed top-k) FIRST, then the global
     // row_number window runs over 20 rows only — never a full sort of
     // the node table on one partition.
@@ -321,7 +318,6 @@ object Graph {
         reach = cp
       }
     }
-    lastCp.foreach(cp => CacheScope.defer(() => CacheScope.freeCheckpoint(cp)))
     val hopCols = (0 to khopMax).map(k =>
       sum(when(col("hop") === k, 1L).otherwise(0L)).as(s"h$k"))
     docs.join(reach, docs("doc_id") === reach("id"), "left")
@@ -425,7 +421,6 @@ object Graph {
       .observe(obs0, count(lit(1)).as("n"))
       .graftCheckpoint()
     var prevN = Option(obs0.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    var lastCp = edges
     var stable = prevN == 0L
     var round = 1
     while (round <= kcoreRounds && !stable) {
@@ -437,16 +432,13 @@ object Graph {
         .observe(obs, count(lit(1)).as("n"))
         .graftCheckpoint()
       val n = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      CacheScope.freeCheckpoint(lastCp)
-      lastCp = next
+      CacheScope.freeCheckpoint(edges)
       edges = next
       stable = n == prevN // removal-free round: the peel has settled
       prevN = n
       round += 1
     }
     val core = degrees(edges).filter(col("d") >= kcoreK).select(col("x"))
-    val cp = lastCp
-    CacheScope.defer(() => CacheScope.freeCheckpoint(cp))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
     docs.join(core, docs("doc_id") === core("x"), "left")
       .groupBy("source")

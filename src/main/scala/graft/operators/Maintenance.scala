@@ -99,15 +99,9 @@ object Maintenance {
       clusterBy = Some("doc_id"))
     // snapshot through a checkpoint (the DailyPipeline pattern): the
     // staging dirs are deleted at release, the result must outlive them
-    val out = {
-      import graft.CacheScope.CheckpointOps
-      spark.read.parquet(packed)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-        .graftCheckpoint()
-    }
-    graft.CacheScope.defer(() => graft.CacheScope.freeCheckpoint(out))
-    out
+    graft.CacheScope.checkpoint(spark.read.parquet(packed)
+      .select("doc_id", "text", "lang", "source", "n_chars")
+      .orderBy("doc_id"))
   }
 
   private val compactFilesOracle =
@@ -291,12 +285,7 @@ object Maintenance {
       s"graft_${prefix}_${java.util.UUID.randomUUID().toString.take(8)}")
     graft.CacheScope.defer(() => graft.sources.Sources.deleteRecursively(stage))
     val out = body(stage.getAbsolutePath)
-    val snap = {
-      import graft.CacheScope.CheckpointOps
-      out.graftCheckpoint()
-    }
-    graft.CacheScope.defer(() => graft.CacheScope.freeCheckpoint(snap))
-    snap
+    graft.CacheScope.checkpoint(out)
   }
 
   /** Sorted version ids present at `path` (manifest listing only —

@@ -20,6 +20,10 @@ import scala.collection.mutable
   * swings wall-clock 1.3–2× invisibly to the load average, so only
   * interleaved variants are comparable). Several keys with alternatives
   * run their cross product.
+  *
+  * Every warmup and timed run also prints `janino=N`, the classes Spark
+  * compiled for it (Janino compiles, the `CodegenMetrics` count); a
+  * warm run that compiles anything missed Spark's codegen cache.
   */
 object Profile {
 
@@ -128,22 +132,28 @@ object Profile {
       graft.Registry.byName(n).fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     def label(v: Seq[(String, String)]): String =
       v.map { case (k, x) => s" $k=$x" }.mkString
+    def janino(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val rounds = if (variants.size > 1) 3 else 1
     names.foreach { n =>
       // one untimed warmup per variant, like Bench
       variants.foreach { v =>
+        val j0 = janino()
         try graft.CacheScope.withConf(spark, v: _*)(force(n))
         catch { case _: Throwable => () }
         finally graft.CacheScope.releaseAll()
+        println(s"[profile] $n warmup${label(v)} janino=${janino() - j0}")
       }
       for (round <- 1 to rounds; v <- variants) {
         stages.clear(); jobs.clear(); jobSpans.clear(); sampleCounts.clear()
+        val j0 = janino()
         val t0 = System.nanoTime()
         sampling = true
         try graft.CacheScope.withConf(spark, v: _*)(force(n))
         catch { case e: Throwable => println(s"[$n] FAILED: ${e.getMessage}") }
         finally { sampling = false; graft.CacheScope.releaseAll() }
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = janino() - j0
         Thread.sleep(300) // let listener events drain
         // driver-side dead time: wall minus the union of job spans
         val spans = jobSpans.sortBy(_._1)
@@ -154,7 +164,7 @@ object Profile {
         }
         val spanTotal = if (spans.nonEmpty) spans.map(_._2).max - spans.head._1 else 0L
         val tag = if (rounds > 1) s" #$round${label(v)}" else ""
-        println(f"\n### $n$tag wall=$wall%.3f s jobs=${jobs.size} stages=${stages.size} " +
+        println(f"\n### $n$tag wall=$wall%.3f s jobs=${jobs.size} stages=${stages.size} janino=$compiles " +
           f"stageWallSum=${stages.map(_.wallMs).sum / 1000.0}%.3f s " +
           f"jobCovered=${covered / 1000.0}%.3f s interJobGaps=${(spanTotal - covered) / 1000.0}%.3f s")
         import scala.jdk.CollectionConverters._

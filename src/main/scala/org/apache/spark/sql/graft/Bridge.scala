@@ -29,6 +29,28 @@ object Bridge {
       case _ => None
     }
 
+  /** `df.localCheckpoint()`, except that a generation whose
+    * materializing job fails is not left behind. Spark persists the new
+    * RDD and registers it with the context before that job runs; when
+    * the job fails, nothing the caller holds reaches the RDD, and its
+    * blocks would stay until a GC ran the context cleaner. So on
+    * failure every locally checkpointed RDD created during the call is
+    * unpersisted. (A local checkpoint that another thread starts in
+    * that same instant would be unpersisted too; graft's runners run
+    * one operator at a time per session.) */
+  def localCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val floor = sc.newRddId()
+    try df.localCheckpoint()
+    catch { case e: Throwable =>
+      sc.getPersistentRDDs.values
+        .filter(r => r.id > floor && r.checkpointData.exists(
+          _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+        .foreach(_.unpersist(blocking = false))
+      throw e
+    }
+  }
+
   /** Free whatever a checkpointed Dataset generation holds: the
     * executor blocks of a localCheckpoint (unpersist on the
     * materialized RDD — the one release `Dataset.unpersist` cannot

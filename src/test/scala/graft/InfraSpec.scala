@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions._
 import graft.sources.Sources
 
@@ -568,6 +571,28 @@ class InfraSpec extends SparkSpec {
     } finally { a.unpersist(blocking = true); b.unpersist(blocking = true) }
   }
 
+  test("an iterative operator that fails mid-loop leaves no cache and no conf behind") {
+    clearCaches()
+    val confBefore = spark.conf.getAll
+    // a 64-node path: connected components needs several rounds, and
+    // its third round's checkpoint job fails in its tasks
+    val edges = spark.range(0, 63).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val inject = new FailRound("cc_round_2_")
+    spark.experimental.extraStrategies = Seq(inject)
+    try {
+      val e = intercept[Exception](operators.Dedup.connectedComponents(edges).collect())
+      assert(inject.fired, s"the loop ended before its third round: $e")
+    } finally spark.experimental.extraStrategies = Nil
+    CacheScope.releaseAll()
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(live.isEmpty, s"leaked: ${live.values.mkString("; ")}")
+    assert(spark.conf.getAll === confBefore)
+    // the session still runs the operator
+    assert(operators.Dedup.connectedComponents(edges)
+      .select("component").distinct().collect().map(_.getLong(0)).toSeq === Seq(0L))
+    CacheScope.releaseAll()
+  }
+
   test("profile.conf alternatives expand to the variants the profiler interleaves") {
     val (fixed, variants) = graft.tools.Profile.parseConf(
       "spark.sql.adaptive.enabled=true,a.k=0|64,b.k=x=1|y")
@@ -579,4 +604,23 @@ class InfraSpec extends SparkSpec {
     assert(graft.tools.Profile.parseConf("")._2 === Seq(Seq.empty))
     intercept[IllegalArgumentException](graft.tools.Profile.parseConf("novalue"))
   }
+}
+
+/** Plans the observation named `prefix…` (one loop round's) under an
+  * operator whose tasks throw, so that round's job fails. */
+private class FailRound(prefix: String) extends SparkStrategy {
+  @volatile var fired = false
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case c: CollectMetrics if c.name.startsWith(prefix) =>
+      fired = true
+      Seq(FailingExec(planLater(c.child)))
+    case _ => Nil
+  }
+}
+
+private case class FailingExec(child: SparkPlan) extends UnaryExecNode {
+  override def output = child.output
+  override protected def doExecute() = child.execute().mapPartitions[InternalRow](
+    _ => throw new IllegalStateException("injected task failure"))
+  override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 }
