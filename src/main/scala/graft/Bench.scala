@@ -381,7 +381,8 @@ object Bench {
         s""","attempts":$attemptsJson""" +
         s""","maintenance":$maintJson""" +
         // r10 A/B root-cause pointer: load-sensitivity analysis of the
-        // r8→r9 drift lives in PERF_r10.md (+ tools/ab_*.json)
+        // r8→r9 drift lives in PERF_r10.md (+ tools/ab_*.json, last in
+        // the tree at commit a428ae9)
         s""","perf_note":"PERF_r10.md","detail":${Json.str(outFile)}}"""
     println(stdoutLine)
     spark.stop()

@@ -73,7 +73,8 @@ object GraftSession {
       // Coalescing is advisory-size-driven (same policy as every other
       // stage), so at 100 TB big caches keep their partition counts and
       // their hash layout; only below-advisory caches shrink.
-      // Interleaved A/B at sf0.1 (tools/profile_r13_cachepart_ab.txt):
+      // Interleaved A/B at sf0.1 (tools/profile_r13_cachepart_ab.txt,
+      // last in the tree at commit a428ae9):
       // q_pagerank 2.4-3.0 s → 1.5-1.8 s (tasks 345 → 35),
       // q_dedup_clusters 2.8-3.2 → 2.0-2.2 (423 → 51), q_sql_merge
       // 7.1-7.7 → 6.3-6.6 (370 → 138); values partition-invariant

@@ -252,7 +252,8 @@ object Dedup {
     // KB-sized frame, so coalescing its stages to one partition
     // serializes real compute (interleaved 4-way A/B at sf0.1:
     // 1.5–1.9 s with fixed cache partitioning vs 3.2–3.5 s coalesced,
-    // both count variants — tools/profile_r13_minhash_ab.txt). Spark
+    // both count variants — tools/profile_r13_minhash_ab.txt, last in
+    // the tree at commit a428ae9). Spark
     // reads the key only when persist() registers a cache, and builds
     // the cached plan in a cloned session that keeps the value, so the
     // override holds around each persist alone and the caller's conf

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   * and PageRank (Graph.scala). */
 class CausalGraphSpec extends SparkSpec {
 
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-
   /** The switchback assignment, replicated from collected rows. */
   private def isOn(ts: java.sql.Timestamp, userId: Long): Boolean = {
     val hour = java.lang.Math.floorDiv(ts.getTime * 1000L, 3600000000L)
@@ -194,10 +191,6 @@ class CausalGraphSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .select("source", "doc_id", "n_chars").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    def lcg(k: Long, salt: Long): Long = {
-      val s1 = ((k % 2147483648L) * 1103515245L + (12345L + salt * 1013904223L)) % 2147483648L
-      (s1 * 1103515245L + 12345L) % 2147483648L
-    }
     val expected = docs.groupBy(_._1).toSeq.flatMap { case (src, ds) =>
       ds.toSeq.map { case (_, id, w) =>
         val u = (lcg(id, 77L) + 1.0) / 2147483649.0
@@ -270,17 +263,15 @@ class CausalGraphSpec extends SparkSpec {
       val pts = top.zipWithIndex.map { case ((_, c), i) =>
         (math.log((i + 1).toDouble), math.log(c.toDouble)) }
       val n = pts.size.toDouble
-      def dsum(f: ((Double, Double)) => Double): Double =
+      def sumR6(f: ((Double, Double)) => Double): Double =
         pts.map(p => BigDecimal(r6d(f(p)))).sum.toDouble
-      val (sx, sy) = (dsum(_._1), dsum(_._2))
-      val sxy = dsum(p => p._1 * p._2); val sxx = dsum(p => p._1 * p._1)
+      val (sx, sy) = (sumR6(_._1), sumR6(_._2))
+      val sxy = sumR6(p => p._1 * p._2); val sxx = sumR6(p => p._1 * p._1)
       val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
       val r = out(src)
       assert(r.getAs[Long]("n_terms") === pts.size.toLong)
       val got = r.getAs[Double]("zipf_slope")
-      assert(math.abs(got -
-        math.signum(slope) * math.floor(math.abs(slope) * 1e4 + 0.5) / 1e4) < 1e-12,
-        s"$src: $got vs $slope")
+      assert(math.abs(got - r4d(slope)) < 1e-12, s"$src: $got vs $slope")
       assert(got < 0.0, s"$src slope must be negative, got $got")
     }
   }
@@ -307,8 +298,7 @@ class CausalGraphSpec extends SparkSpec {
           }
           BigDecimal(r6d(dot / (math.sqrt(nv) * cNrm)))
         }
-        val m = coss.sum.toDouble / n
-        math.signum(m) * math.floor(math.abs(m) * 1e4 + 0.5) / 1e4
+        r4d(coss.sum.toDouble / n)
       }
       val r = out(label)
       assert(r.getAs[Long]("n_vecs") === n.toLong)

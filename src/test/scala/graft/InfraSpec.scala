@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions._
 import graft.sources.Sources
@@ -84,42 +84,45 @@ class InfraSpec extends SparkSpec {
   }
 
   test("partitioned write round-trips and prunes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val df = Tables.orders(spark, sfDir)
-    Sources.writePartitioned(df, dir, Seq("o_orderstatus"))
-    val back = Sources.readParquet(spark, dir)
-    assert(back.count() === df.count())
-    // partition filter must prune to the one directory
-    val plan = back.filter(col("o_orderstatus") === "F")
-      .queryExecution.executedPlan.toString
-    assert(back.filter(col("o_orderstatus") === "F").count() ===
-      df.filter(col("o_orderstatus") === "F").count())
-    assert(plan.contains("PartitionFilters") || !plan.contains("o_orderstatus = F"))
+    withStage("graft_part") { dir =>
+      val df = Tables.orders(spark, sfDir)
+      Sources.writePartitioned(df, dir, Seq("o_orderstatus"))
+      val back = Sources.readParquet(spark, dir)
+      assert(back.count() === df.count())
+      // partition filter must prune to the one directory
+      val plan = back.filter(col("o_orderstatus") === "F")
+        .queryExecution.executedPlan.toString
+      assert(back.filter(col("o_orderstatus") === "F").count() ===
+        df.filter(col("o_orderstatus") === "F").count())
+      assert(plan.contains("PartitionFilters") || !plan.contains("o_orderstatus = F"))
+    }
   }
 
   test("csv round-trip with explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    Tables.nation(spark, sfDir).write.mode("overwrite")
-      .option("header", "true").csv(dir)
-    val back = Sources.readCsv(spark, dir,
-      "n_nationkey INT, n_name STRING, n_regionkey INT")
-    assert(back.count() === 25)
-    assert(back.schema.fieldNames.toSeq === Seq("n_nationkey", "n_name", "n_regionkey"))
+    withStage("graft_csv") { dir =>
+      Tables.nation(spark, sfDir).write.mode("overwrite")
+        .option("header", "true").csv(dir)
+      val back = Sources.readCsv(spark, dir,
+        "n_nationkey INT, n_name STRING, n_regionkey INT")
+      assert(back.count() === 25)
+      assert(back.schema.fieldNames.toSeq === Seq("n_nationkey", "n_name", "n_regionkey"))
+    }
   }
 
   test("orc round-trip preserves rows and pushes predicates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    Sources.writeOrc(Tables.customer(spark, sfDir)
-      .select("c_custkey", "c_name", "c_acctbal"), dir)
-    val back = Sources.readOrc(spark, dir,
-      "c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE")
-    assert(back.count() === Tables.customer(spark, sfDir).count())
-    val filtered = back.filter(col("c_acctbal") > 5000)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") &&
-      plan.contains("c_acctbal"), s"no ORC pushdown in:\n$plan")
-    assert(filtered.count() ===
-      Tables.customer(spark, sfDir).filter(col("c_acctbal") > 5000).count())
+    withStage("graft_orc") { dir =>
+      Sources.writeOrc(Tables.customer(spark, sfDir)
+        .select("c_custkey", "c_name", "c_acctbal"), dir)
+      val back = Sources.readOrc(spark, dir,
+        "c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE")
+      assert(back.count() === Tables.customer(spark, sfDir).count())
+      val filtered = back.filter(col("c_acctbal") > 5000)
+      val plan = filtered.queryExecution.executedPlan.toString
+      assert(plan.contains("PushedFilters") &&
+        plan.contains("c_acctbal"), s"no ORC pushdown in:\n$plan")
+      assert(filtered.count() ===
+        Tables.customer(spark, sfDir).filter(col("c_acctbal") > 5000).count())
+    }
   }
 
   test("bloom semi-join: filters the fact side, result exactly the plain semi-join") {
@@ -146,9 +149,7 @@ class InfraSpec extends SparkSpec {
       .select(col("c_custkey").as("o_custkey"), col("c_name"))
     Sources.writeBucketed(orders, "graft_orders_bkt", "o_custkey", 8)
     Sources.writeBucketed(cust, "graft_cust_bkt", "o_custkey", 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    CacheScope.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("graft_orders_bkt")
         .join(spark.table("graft_cust_bkt"), "o_custkey")
       assert(j.count() > 0)
@@ -156,7 +157,7 @@ class InfraSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan.take(2000))
       assert(!plan.contains("Exchange"),
         s"bucketed join must not shuffle:\n${plan.take(2000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("RectPipRule rewrites literal-rectangle pip to pushed-down ranges") {
@@ -407,7 +408,7 @@ class InfraSpec extends SparkSpec {
     Seq("q_grouping_sets", "q_unpivot").foreach { n =>
       val qe = Registry.byName(n).fn(spark, sfDir).queryExecution
       val plan = qe.executedPlan.toString
-      assert(plan.sliding("Expand".length).count(_ == "Expand") >= 1, s"$n: Expand missing")
+      assert(occurrences(plan, "Expand") >= 1, s"$n: Expand missing")
       assert(qe.optimizedPlan.collectLeaves().size === 1, s"$n must scan the fact once")
     }
     // q_pagerank: the edge table is built ONCE and served from cache —
@@ -416,8 +417,7 @@ class InfraSpec extends SparkSpec {
     locally {
       val plan = Registry.byName("q_pagerank").fn(spark, sfDir)
         .queryExecution.executedPlan.toString
-      val cacheReads = plan.sliding("InMemoryTableScan".length)
-        .count(_ == "InMemoryTableScan")
+      val cacheReads = occurrences(plan, "InMemoryTableScan")
       assert(cacheReads >= 5, s"expected >=5 cached edge reads, got $cacheReads")
       assert(plan.contains("TakeOrderedAndProject"), "top-k must be TakeOrdered")
       CacheScope.releaseAll()
@@ -459,8 +459,7 @@ class InfraSpec extends SparkSpec {
     locally {
       val qe = Registry.byName("q_khop").fn(spark, sfDir).queryExecution
       val plan = qe.executedPlan.toString
-      val cacheReads = plan.sliding("InMemoryTableScan".length)
-        .count(_ == "InMemoryTableScan")
+      val cacheReads = occurrences(plan, "InMemoryTableScan")
       assert(cacheReads >= 3, s"expected >=3 cached edge reads, got $cacheReads")
       // tail segment = 3 lazy rounds over the round-3 checkpoint →
       // ≤ 2³ checkpoint-leaf copies + per-round edge/doc leaves
@@ -501,8 +500,7 @@ class InfraSpec extends SparkSpec {
       // all three branches (two rank tables + join-back) must read the
       // persisted pair table; the parquet scan lives only inside the
       // (single) cached relation, so runtime touches lineitem once
-      val cacheReads = exec.sliding("InMemoryTableScan".length)
-        .count(_ == "InMemoryTableScan")
+      val cacheReads = occurrences(exec, "InMemoryTableScan")
       assert(cacheReads >= 3, s"expected >=3 cached pair-table reads, got $cacheReads")
       CacheScope.releaseAll()
     }
@@ -515,13 +513,6 @@ class InfraSpec extends SparkSpec {
       assert(!qe.executedPlan.toString.contains("Window"),
         "shard assignment must not sort/window anything")
     }
-  }
-
-  /** Drop every cache and persisted RDD other suites left behind. */
-  private def clearCaches(): Unit = {
-    CacheScope.releaseAll()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
   test("CacheScope releases only what the calling thread registered") {
@@ -577,7 +568,8 @@ class InfraSpec extends SparkSpec {
     // a 64-node path: connected components needs several rounds, and
     // its third round's checkpoint job fails in its tasks
     val edges = spark.range(0, 63).select(col("id").as("src"), (col("id") + 1).as("dst"))
-    val inject = new FailRound("cc_round_2_")
+    val inject = new FailWhen({
+      case c: CollectMetrics if c.name.startsWith("cc_round_2_") => c.child })
     spark.experimental.extraStrategies = Seq(inject)
     try {
       val e = intercept[Exception](operators.Dedup.connectedComponents(edges).collect())
@@ -593,6 +585,30 @@ class InfraSpec extends SparkSpec {
     CacheScope.releaseAll()
   }
 
+  test("minhash dedup whose candidate job fails leaves no cache and no conf behind") {
+    def pairs() = try operators.Dedup.dedupMinhash(spark, sfDir).collect().toSeq
+      finally CacheScope.releaseAll()
+    val confBefore = spark.conf.getAll
+    val expected = pairs()
+    clearCaches()
+    // the candidate filter (buckets with two or more members) sits inside
+    // both cached subplans, so the one job that fills them fails
+    val inject = new FailWhen({
+      case f: Filter if f.condition.references.exists(_.name == "ds") => f.child })
+    spark.experimental.extraStrategies = Seq(inject)
+    try {
+      intercept[Exception](operators.Dedup.dedupMinhash(spark, sfDir).collect())
+      assert(inject.fired, "the injected failure was never planned")
+    } finally spark.experimental.extraStrategies = Nil
+    CacheScope.releaseAll()
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(live.isEmpty, s"leaked: ${live.values.mkString("; ")}")
+    assert(spark.sharedState.cacheManager.isEmpty, "a cached plan is still registered")
+    // the operator's cached-plan opt-out included
+    assert(spark.conf.getAll === confBefore)
+    assert(pairs() === expected, "the session no longer runs the operator")
+  }
+
   test("profile.conf alternatives expand to the variants the profiler interleaves") {
     val (fixed, variants) = graft.tools.Profile.parseConf(
       "spark.sql.adaptive.enabled=true,a.k=0|64,b.k=x=1|y")
@@ -606,15 +622,16 @@ class InfraSpec extends SparkSpec {
   }
 }
 
-/** Plans the observation named `prefix…` (one loop round's) under an
-  * operator whose tasks throw, so that round's job fails. */
-private class FailRound(prefix: String) extends SparkStrategy {
+/** Plans each node `hit` picks — one whose output is its child's, which
+  * `hit` returns (an observation, a filter) — as an operator whose tasks
+  * throw, so every job that runs it fails. */
+private class FailWhen(hit: PartialFunction[LogicalPlan, LogicalPlan]) extends SparkStrategy {
   @volatile var fired = false
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case c: CollectMetrics if c.name.startsWith(prefix) =>
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = hit.lift(plan) match {
+    case Some(child) =>
       fired = true
-      Seq(FailingExec(planLater(c.child)))
-    case _ => Nil
+      Seq(FailingExec(planLater(child)))
+    case None => Nil
   }
 }
 

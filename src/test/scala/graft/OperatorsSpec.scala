@@ -91,21 +91,19 @@ class OperatorsSpec extends SparkSpec {
     // data is partitioned (decimal-exact sums, order-invariant
     // aggregates). Run the full oracle-backed surface under two shuffle
     // widths and require byte-identical row sets.
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val results = Seq("3", "7").map { parts =>
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    val results = Seq("3", "7").map { parts =>
+      CacheScope.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
         Registry.ops.filter(_.oracle.isDefined).map { op =>
           val rows = op.fn(spark, sfDir).collect().map(_.toString).sorted.toSeq
           CacheScope.releaseAll()
           op.name -> rows
         }.toMap
       }
-      results(0).keys.foreach { name =>
-        assert(results(0)(name) === results(1)(name),
-          s"$name differs between 3 and 7 shuffle partitions")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+    results(0).keys.foreach { name =>
+      assert(results(0)(name) === results(1)(name),
+        s"$name differs between 3 and 7 shuffle partitions")
+    }
   }
 
   test("registry names are unique and oracle columns align", SlowTest) {
@@ -113,7 +111,7 @@ class OperatorsSpec extends SparkSpec {
     assert(names.distinct.size === names.size)
     // every oracle-backed op: spark result column set appears in the SQL text
     Registry.ops.filter(_.oracle.isDefined).foreach { op =>
-      val cols = op.fn(spark, sfDir).columns
+      val cols = try op.fn(spark, sfDir).columns finally CacheScope.releaseAll()
       cols.foreach { c =>
         assert(op.oracle.get.toLowerCase.contains(c.toLowerCase),
           s"${op.name}: column $c missing from oracle SQL")

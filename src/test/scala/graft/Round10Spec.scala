@@ -11,19 +11,8 @@ import operators.Maintenance._
   * they land. */
 class Round10Spec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
-  private def parquetFiles(dir: java.io.File): Set[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.toSeq.flatMap(walk)
-      else Seq(f)
-    walk(dir).map(_.getAbsolutePath).filter(_.endsWith(".parquet")).toSet
-  }
-
   test("commit race: the losing writer throws and leaves the winner's manifest untouched") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_race_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_race_") { p =>
       val ev = Tables.events(spark, sfDir)
       assert(snapshotWrite(ev.filter(col("event_id") % 2 === 0), p, nFiles = 2) == 1L)
       // two writers that both derived their state from v1 race for
@@ -39,7 +28,7 @@ class Round10Spec extends SparkSpec {
         fresh => spark.read.parquet(s"$p/versions/v00001").unionByName(fresh.frame),
         Nil, None, Some(1L))
       assert(v2 == 2L)
-      val winnerManifest = parquetFiles(new java.io.File(stage, "versions/v00002"))
+      val winnerManifest = parquetFiles(s"$p/versions/v00002")
       val loserRows = ev.filter(col("event_id") % 3 === 0)
       val err = intercept[IllegalStateException] {
         Maintenance.commitSnapshot(loserRows, p, 2,
@@ -49,8 +38,8 @@ class Round10Spec extends SparkSpec {
       assert(err.getMessage.contains("lost the race"))
       // the winner's manifest dir holds exactly its own files — the
       // loser's staged dir must not have been copied/moved inside it
-      val v2dir = new java.io.File(stage, "versions/v00002")
-      assert(parquetFiles(v2dir) == winnerManifest,
+      val v2dir = new java.io.File(p, "versions/v00002")
+      assert(parquetFiles(v2dir.getPath) == winnerManifest,
         "the losing commit polluted the winner's manifest dir")
       assert(Option(v2dir.listFiles()).toSeq.flatten.forall(!_.isDirectory),
         "a stray staged dir survived inside the winner's version dir")
@@ -61,19 +50,17 @@ class Round10Spec extends SparkSpec {
       val (_, removed) = vacuumSnapshots(spark, p, keep = 2)
       assert(removed > 0L, "the loser's orphan data files were not GC'd")
       assert(readSnapshot(spark, p).count() == ev.count())
-    } finally rm(stage)
+    }
   }
 
   test("snapshot merge rewrites only the files the changeset's keys live in") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_merge_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_merge_") { p =>
       val orders = Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       snapshotWrite(orders, p, nFiles = 8,
         statsCols = Seq("o_orderkey"), clusterBy = Some("o_orderkey"))
-      val before = parquetFiles(new java.io.File(stage, "data"))
+      val before = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       val mf1 = spark.read.parquet(s"$p/versions/v00001")
       // a changeset confined to a narrow key range: updates on keys
@@ -96,7 +83,7 @@ class Round10Spec extends SparkSpec {
       val carried = files1.intersect(files2)
       assert(carried.nonEmpty, "merge rewrote every file — pruning did nothing")
       assert(files1.diff(files2).nonEmpty, "merge rewrote no file")
-      val after = parquetFiles(new java.io.File(stage, "data"))
+      val after = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       assert(before.filter { case (f, _, _) =>
         carried.exists(c => f.endsWith(c)) }.subsetOf(after),
@@ -119,20 +106,18 @@ class Round10Spec extends SparkSpec {
       }
       assert(err.getMessage.contains("lost the race"))
       assert(snapshotVersions(spark, p) == Seq(1L, 2L))
-    } finally rm(stage)
+    }
   }
 
   test("daily partition overwrite: re-landing a day touches only that day's files") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_daily_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_daily_") { p =>
       def land(d: String): Unit =
         operators.DailyPipeline.landDay(spark, sfDir, p, java.time.LocalDate.parse(d))
       land("2024-01-03") // before any test's start: an EMPTY day delta
       land("2024-01-06")
       land("2024-01-12")
       assert(snapshotVersions(spark, p) == Seq(1L, 2L, 3L))
-      val before = parquetFiles(new java.io.File(stage, "data"))
+      val before = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       val mf3 = spark.read.parquet(s"$p/versions/v00003")
       val day12Files = mf3.filter(col("part") === "2024-01-12")
@@ -148,7 +133,7 @@ class Round10Spec extends SparkSpec {
       assert(mf4.filter(col("part") === "2024-01-12")
         .select("file").collect().map(_.getString(0)).toSet == day12Files,
         "re-landing day 06 replaced day 12's files")
-      val after = parquetFiles(new java.io.File(stage, "data"))
+      val after = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       assert(before.filter { case (f, _, _) =>
         day12Files.exists(c => f.endsWith(c)) }.subsetOf(after),
@@ -173,13 +158,11 @@ class Round10Spec extends SparkSpec {
       }
       assert(snapshotVersions(spark, p) == Seq(1L, 2L, 3L, 4L),
         "a rejected impure overwrite still committed a version")
-    } finally rm(stage)
+    }
   }
 
   test("DSv2 snapshot source: SQL range predicates prune files through the manifest") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dsv2_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_dsv2_") { p =>
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev.filter(col("event_id") % 2 === 0), p, nFiles = 8,
         statsCols = Seq("event_id"), clusterBy = Some("event_id"))
@@ -202,7 +185,7 @@ class Round10Spec extends SparkSpec {
             }
         }.flatten
       val prunedFiles = scanFiles(q)
-      val allFiles = parquetFiles(new java.io.File(stage, "data"))
+      val allFiles = parquetFiles(s"$p/data")
       assert(allFiles.size == 16)
       assert(prunedFiles.nonEmpty && prunedFiles.size < allFiles.size,
         s"DSv2 scan planned ${prunedFiles.size} of ${allFiles.size} files — no pruning")
@@ -220,7 +203,7 @@ class Round10Spec extends SparkSpec {
         ev.filter(col("event_id") % 2 === 0 &&
           col("event_id").between(100L, 199L)).count())
       assert(scanFiles(v1).size < 8, "v1 read did not prune")
-    } finally rm(stage)
+    }
   }
 
   test("spherical kernel is genuinely geodesic: bulge and antimeridian disagree with planar; meridian boxes agree") {
@@ -302,9 +285,7 @@ class Round10Spec extends SparkSpec {
   }
 
   test("CDC version-diff reads plan only the delta files; merges surface the rewritten superset") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_cdc_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_cdc_") { p =>
       val orders = Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       val v1 = snapshotWrite(orders, p, nFiles = 8,
@@ -337,13 +318,11 @@ class Round10Spec extends SparkSpec {
       // change without ever re-reading the table
       assert(Maintenance.snapshotChanges(spark, p, v1, v3).count() >=
         50L + changes.count())
-    } finally rm(stage)
+    }
   }
 
   test("partition compaction bin-packs one day and carries the rest verbatim") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_pcompact_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_pcompact_") { p =>
       val ev = Tables.events(spark, sfDir)
       def slice(m: Int) = ev.filter(col("event_id") % 3 === m)
         .withColumn("day", lit(s"d$m"))
@@ -382,15 +361,14 @@ class Round10Spec extends SparkSpec {
           p, "day", "d0", nFiles = 1, base = Some(headV))
       }
       assert(stale.getMessage.contains("lost the race"))
-    } finally rm(stage)
+    }
   }
 
   test("DSv2 reads evolve schema on request and prune z-ordered tables on either column") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dsv2b_").toFile
-    try {
+    withStage("graft_dsv2b_") { dir =>
       // schema evolution through SQL: v2 appends an added column; the
       // mergeSchema read surfaces it with NULL backfill on v1's files
-      val p = new java.io.File(stage, "evolve").getAbsolutePath
+      val p = s"$dir/evolve"
       val docs = Tables.documents(spark, sfDir).select("doc_id", "n_chars")
       snapshotWrite(docs.filter(col("doc_id") % 2 === 0), p, nFiles = 2)
       snapshotAppend(docs.filter(col("doc_id") % 2 === 1)
@@ -409,7 +387,7 @@ class Round10Spec extends SparkSpec {
       assert(plain.count() == docs.count())
       // z-order + DSv2 compose: the z-clustered table's manifest carries
       // stats on BOTH columns, so a SQL predicate on EITHER prunes files
-      val zp = new java.io.File(stage, "z").getAbsolutePath
+      val zp = s"$dir/z"
       val grid = spark.range(64L * 64L)
         .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
       Maintenance.writeZordered(grid, zp, "x", "y", bits = 6, nFiles = 16)
@@ -428,13 +406,11 @@ class Round10Spec extends SparkSpec {
       assert(zScanFiles("x BETWEEN 0 AND 7") <= 8,
         "DSv2 did not prune the z table on x")
       assert(zScanFiles("true") == 16)
-    } finally rm(stage)
+    }
   }
 
   test("DSv2 writer maps modes onto snapshot commits with stats intact") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dsv2w_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_dsv2w_") { p =>
       val ev = Tables.events(spark, sfDir)
         .select("event_id", "user_id", "event_type", "value")
       def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
@@ -443,12 +419,12 @@ class Round10Spec extends SparkSpec {
           .option("clusterBy", "event_id").mode(mode).save(p)
       write(ev.filter(col("event_id") % 2 === 0), "overwrite")
       assert(snapshotVersions(spark, p) == Seq(1L), "first write must create v1")
-      val v1Files = parquetFiles(new java.io.File(stage, "data"))
+      val v1Files = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       write(ev.filter(col("event_id") % 2 === 1), "append")
       assert(snapshotVersions(spark, p) == Seq(1L, 2L))
       // append through the writer rewrote nothing
-      val after = parquetFiles(new java.io.File(stage, "data"))
+      val after = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       assert(v1Files.subsetOf(after), "DSv2 append rewrote a v1 file")
       assert(readSnapshot(spark, p).count() == ev.count())
@@ -464,13 +440,11 @@ class Round10Spec extends SparkSpec {
       assert(readSnapshot(spark, p).count() == 100L)
       assert(readSnapshot(spark, p, Some(2L)).count() == ev.count(),
         "SQL-side truncate must leave prior versions readable")
-    } finally rm(stage)
+    }
   }
 
   test("snapshotHistory reports the commit ledger") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_hist_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_hist_") { p =>
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev.filter(col("event_id") % 2 === 0), p, nFiles = 3)
       snapshotAppend(ev.filter(col("event_id") % 2 === 1), p, nFiles = 2)
@@ -482,7 +456,7 @@ class Round10Spec extends SparkSpec {
       assert(h(1).getLong(4) == 2L, "v2 added exactly its 2 new files")
       assert(!h(0).getTimestamp(1).after(h(1).getTimestamp(1)),
         "commit timestamps must be monotone")
-    } finally rm(stage)
+    }
   }
 
   test("geodesic kernel property: random meridian-edged boxes agree with planar away from the bulge") {
@@ -525,9 +499,7 @@ class Round10Spec extends SparkSpec {
   }
 
   test("concurrent appenders: every commit either lands completely or throws — rows never lost") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_race2_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_race2_") { p =>
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev.limit(100), p, nFiles = 1)
       val base = readSnapshot(spark, p).count()
@@ -564,13 +536,11 @@ class Round10Spec extends SparkSpec {
         s"row accounting broken: base $base + landed ${landed.sum}")
       assert(snapshotVersions(spark, p).size.toLong == 1L + landed.size,
         "version count disagrees with successful commits")
-    } finally rm(stage)
+    }
   }
 
   test("compaction preserves the manifest stats contract by default") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_cstats_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_cstats_") { p =>
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev.filter(col("event_id") % 2 === 0), p, nFiles = 4,
         statsCols = Seq("event_id"), clusterBy = Some("event_id"))
@@ -591,6 +561,6 @@ class Round10Spec extends SparkSpec {
       val v4 = snapshotAppend(ev.limit(0), p, nFiles = 1,
         statsCols = Seq("event_id"), clusterBy = Some("event_id"))
       assert(v4 == 4L)
-    } finally rm(stage)
+    }
   }
 }

@@ -12,31 +12,19 @@ import operators.Maintenance._
   * restarts and refuses non-append commits. */
 class Round10bSpec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
-  private def dataFiles(stage: java.io.File): Set[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.toSeq.flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(stage, "data")).map(_.getAbsolutePath)
-      .filter(_.endsWith(".parquet")).toSet
-  }
-
   // ─────────────────────────────────────────────────────────── RESTORE
 
   test("restore is a metadata-only commit: zero data written, head flips back") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_restore_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_restore_") { p =>
       val ev = Tables.events(spark, sfDir)
       val evens = ev.filter(col("event_id") % 2 === 0)
       snapshotWrite(evens, p, nFiles = 2, statsCols = Seq("event_id"))
       snapshotAppend(ev.filter(col("event_id") % 2 === 1), p, nFiles = 2,
         statsCols = Seq("event_id"))
-      val before = dataFiles(stage)
+      val before = parquetFiles(s"$p/data")
       val v3 = snapshotRestore(spark, p, 1L)
       assert(v3 == 3L)
-      assert(dataFiles(stage) == before,
+      assert(parquetFiles(s"$p/data") == before,
         "restore wrote or removed data files — it must be metadata-only")
       // head answers exactly v1; the rolled-back v2 stays readable
       assert(readSnapshot(spark, p).count() == evens.count())
@@ -48,13 +36,11 @@ class Round10bSpec extends SparkSpec {
       // restoring the current head is legal: an explicit audit version
       assert(snapshotRestore(spark, p, 3L) == 4L)
       assert(readSnapshot(spark, p).count() == evens.count())
-    } finally rm(stage)
+    }
   }
 
   test("vacuum after restore keeps the restored head's files and GCs the rolled-back batch") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_restvac_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_restvac_") { p =>
       val ev = Tables.events(spark, sfDir)
       val evens = ev.filter(col("event_id") % 2 === 0)
       snapshotWrite(evens, p, nFiles = 2, statsCols = Seq("event_id"))
@@ -67,27 +53,23 @@ class Round10bSpec extends SparkSpec {
       // because the restored HEAD references them
       assert(removed == 2L)
       assert(readSnapshot(spark, p).count() == evens.count())
-    } finally rm(stage)
+    }
   }
 
   test("restore of an expired or unknown version throws") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_restbad_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_restbad_") { p =>
       snapshotWrite(Tables.events(spark, sfDir).limit(10), p, nFiles = 1)
       val e = intercept[IllegalArgumentException] {
         snapshotRestore(spark, p, 7L)
       }
       assert(e.getMessage.contains("not in"))
-    } finally rm(stage)
+    }
   }
 
   // ──────────────────────────────────────────────────────────── DELETE
 
   test("delete rewrites only the range-intersecting files and carries the rest verbatim") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_del_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_del_") { p =>
       val ev = Tables.events(spark, sfDir)
       val n = ev.count()
       snapshotWrite(ev, p, nFiles = 8,
@@ -115,26 +97,22 @@ class Round10bSpec extends SparkSpec {
       assert(readSnapshot(spark, p).count() == n - deleted)
       assert(readSnapshot(spark, p)
         .filter(col("event_id").between(lo, hi)).count() == 0)
-    } finally rm(stage)
+    }
   }
 
   test("delete of a range no file intersects is a no-op: no version churn") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_delnoop_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_delnoop_") { p =>
       snapshotWrite(Tables.events(spark, sfDir), p, nFiles = 4,
         statsCols = Seq("event_id"), clusterBy = Some("event_id"))
       val v = snapshotDelete(spark, p, "event_id", -500L, -100L, nFiles = 1)
       assert(v == 1L)
       assert(snapshotVersions(spark, p) == Seq(1L))
-    } finally rm(stage)
+    }
   }
 
   test("delete keeps NULL-keyed rows (NULL is in no range) and needs stats") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_delnull_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_delnull_") { p =>
       val df = Seq[(java.lang.Long, String)]((1L, "a"), (5L, "b"),
         (null, "keep-me"), (9L, "c")).toDF("k", "v")
       snapshotWrite(df, p, nFiles = 1, statsCols = Seq("k"))
@@ -143,19 +121,17 @@ class Round10bSpec extends SparkSpec {
         .collect().map(_.getString(1)).toSeq
       assert(left == Seq("c", "keep-me"))
       // a stat-less table refuses (delete would be a blind full rewrite)
-      val p2 = new java.io.File(stage, "nostats").getAbsolutePath
+      val p2 = s"$p/nostats"
       snapshotWrite(df, p2, nFiles = 1)
       val e = intercept[IllegalArgumentException] {
         snapshotDelete(spark, p2, "k", 1L, 5L, nFiles = 1)
       }
       assert(e.getMessage.contains("no manifest stats"))
-    } finally rm(stage)
+    }
   }
 
   test("delete pinned to a superseded base throws instead of losing the interleaved commit") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_delrace_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_delrace_") { p =>
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev, p, nFiles = 4,
         statsCols = Seq("event_id"), clusterBy = Some("event_id"))
@@ -166,15 +142,13 @@ class Round10bSpec extends SparkSpec {
           asOf = Some(1L))
       }
       assert(e.getMessage.contains("lost the race"))
-    } finally rm(stage)
+    }
   }
 
   // ─────────────────────────────────────────────────────────────── IVM
 
   test("ivm folds over a long append chain equal the full recompute") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_ivm_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_ivm_") { p =>
       val ev = Tables.events(spark, sfDir)
       def slice(r: Int) = ev.filter(col("event_id") % 5 === r)
       val keys = Seq("event_type")
@@ -193,14 +167,12 @@ class Round10bSpec extends SparkSpec {
       assert(got.toSeq == want.toSeq)
       // the fold is a schema fixed point — 4 folds kept DECIMAL(18,4)
       assert(view.schema("sum_dec").dataType.simpleString == "decimal(18,4)")
-    } finally rm(stage)
+    }
   }
 
   test("signed ivm deltas stay exact across merge, delete, and compaction commits") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_ivmrw_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_ivmrw_") { p =>
       val base = (1L to 200L).map(k => (k, s"t${k % 3}", k * 1.5)).toDF("k", "g", "v")
       val keys = Seq("g")
       var v = snapshotWrite(base, p, nFiles = 4,
@@ -229,7 +201,7 @@ class Round10bSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2).toString)).toSeq
       assert(got == want,
         "incrementally maintained view diverged from the full recompute")
-    } finally rm(stage)
+    }
   }
 
   test("a key whose rows all leave the table leaves the view") {
@@ -245,22 +217,20 @@ class Round10bSpec extends SparkSpec {
   }
 
   test("partition drop is metadata-only; vacuum reclaims exactly the dropped shard") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_pdrop_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_pdrop_") { p =>
       val ev = Tables.events(spark, sfDir)
         .withColumn("shard", (col("event_id") % 3).cast("string"))
       for (r <- 0 to 2)
         snapshotOverwritePartition(ev.filter(col("shard") === r.toString), p,
           "shard", r.toString, nFiles = 2, statsCols = Seq("event_id"))
-      val before = dataFiles(stage)
+      val before = parquetFiles(s"$p/data")
       val droppedFiles = snapshotManifest(spark, p)
         .filter(col("part") === "1").select("file")
         .collect().map(r => s"$p/data/${r.getString(0)}").toSet
       assert(droppedFiles.size == 2)
       val v = snapshotDropPartition(spark, p, "1")
       assert(v == 4L)
-      assert(dataFiles(stage) == before,
+      assert(parquetFiles(s"$p/data") == before,
         "partition drop must write and remove NOTHING — metadata only")
       assert(readSnapshot(spark, p).count() ==
         ev.filter(col("shard") =!= "1").count())
@@ -281,15 +251,13 @@ class Round10bSpec extends SparkSpec {
         snapshotDropPartition(spark, p, "2")
       }
       assert(e.getMessage.contains("would empty"))
-    } finally rm(stage)
+    }
   }
 
   // ─────────────────────────────────────────────────── SQL catalog
 
   test("catalog: TIMESTAMP AS OF resolves by commit instant, DSv2 insert inherits stats") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_cat_").toFile
-    try {
-      val root = stage.getAbsolutePath
+    withStage("graft_cat_") { root =>
       val tbl = s"$root/t"
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev.filter(col("event_id") % 2 === 0), tbl, nFiles = 2,
@@ -322,17 +290,16 @@ class Round10bSpec extends SparkSpec {
       // the appended batch's files
       assert(readSnapshotRange(spark, tbl, "event_id", 20000000L, 30000000L)
         .count() == 10L)
-    } finally rm(stage)
+    }
   }
 
   // ──────────────────────────────────────────────── snapshot STREAMING
 
   test("snapshot stream: one micro-batch per version, tail pickup, exactly-once restart") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_tail_").toFile
-    try {
-      val p = new java.io.File(stage, "table").getAbsolutePath
-      val sink = new java.io.File(stage, "sink").getAbsolutePath
-      val cp = new java.io.File(stage, "cp").getAbsolutePath
+    withStage("graft_tail_") { dir =>
+      val p = s"$dir/table"
+      val sink = s"$dir/sink"
+      val cp = s"$dir/cp"
       val ev = Tables.events(spark, sfDir)
       def quarter(r: Int) = ev.filter(col("event_id") % 4 === r)
       snapshotWrite(quarter(0), p, nFiles = 2, statsCols = Seq("event_id"))
@@ -367,13 +334,12 @@ class Round10bSpec extends SparkSpec {
       val dupes = spark.read.parquet(sink).groupBy("event_id")
         .count().filter(col("count") > 1).count()
       assert(dupes == 0, "a version was double-delivered")
-    } finally rm(stage)
+    }
   }
 
   test("snapshot stream refuses a non-append commit unless ignoreChanges") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_tailnc_").toFile
-    try {
-      val p = new java.io.File(stage, "table").getAbsolutePath
+    withStage("graft_tailnc_") { dir =>
+      val p = s"$dir/table"
       val ev = Tables.events(spark, sfDir)
       snapshotWrite(ev.filter(col("event_id") % 2 === 0), p, nFiles = 2,
         statsCols = Seq("event_id"), clusterBy = Some("event_id"))
@@ -381,7 +347,7 @@ class Round10bSpec extends SparkSpec {
       val q = spark.readStream.format("graft.sources.SnapshotSource").load(p)
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation",
-          new java.io.File(stage, "cp").getAbsolutePath)
+          s"$dir/cp")
         .outputMode("append").start()
       try {
         q.processAllAvailable()
@@ -400,7 +366,7 @@ class Round10bSpec extends SparkSpec {
         .option("ignoreChanges", true).load(p)
         .writeStream.format("memory").queryName(name2)
         .option("checkpointLocation",
-          new java.io.File(stage, "cp2").getAbsolutePath)
+          s"$dir/cp2")
         .outputMode("append").start()
       try {
         q2.processAllAvailable()
@@ -409,15 +375,14 @@ class Round10bSpec extends SparkSpec {
         compactSnapshot(spark, p, targetBytes = 1L << 30)
         q2.processAllAvailable() // no throw
       } finally q2.stop()
-    } finally rm(stage)
+    }
   }
 
   test("streaming ivm: one view version per batch, exactly-once across restart") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_sivm_").toFile
-    try {
-      val tbl = new java.io.File(stage, "table").getAbsolutePath
-      val viewP = new java.io.File(stage, "view").getAbsolutePath
-      val cp = new java.io.File(stage, "cp").getAbsolutePath
+    withStage("graft_sivm_") { dir =>
+      val tbl = s"$dir/table"
+      val viewP = s"$dir/view"
+      val cp = s"$dir/cp"
       val ev = Tables.events(spark, sfDir)
       def third(r: Int) = ev.filter(col("event_id") % 3 === r)
       snapshotWrite(third(0), tbl, nFiles = 1, statsCols = Seq("event_id"))
@@ -458,13 +423,12 @@ class Round10bSpec extends SparkSpec {
       val v1 = readSnapshot(spark, viewP, Some(vAfterRun1.head))
         .agg(sum(col("n"))).head().getLong(0)
       assert(v1 == third(0).count())
-    } finally rm(stage)
+    }
   }
 
   test("a paced fresh stream on a vacuumed table starts at the earliest surviving version") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_tailvac_").toFile
-    try {
-      val p = new java.io.File(stage, "table").getAbsolutePath
+    withStage("graft_tailvac_") { dir =>
+      val p = s"$dir/table"
       val ev = Tables.events(spark, sfDir)
       def quarter(r: Int) = ev.filter(col("event_id") % 4 === r)
       snapshotWrite(quarter(0), p, nFiles = 1, statsCols = Seq("event_id"))
@@ -482,14 +446,13 @@ class Round10bSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
       assert(spark.table(name).count() == ev.count(),
         "the paced backfill must read the earliest surviving manifest")
-    } finally rm(stage)
+    }
   }
 
   test("DSv2 overwrite with a new schema commits a fresh contract; appends still inherit") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_dsv2ow_").toFile
-    try {
-      val p = new java.io.File(stage, "t").getAbsolutePath
+    withStage("graft_dsv2ow_") { dir =>
+      val p = s"$dir/t"
       Seq((1L, "a"), (2L, "b")).toDF("k", "v")
         .write.format("graft.sources.SnapshotSource")
         .option("statsCols", "k").mode("overwrite").save(p)
@@ -502,21 +465,19 @@ class Round10bSpec extends SparkSpec {
       assert(readSnapshot(spark, p).columns.toSeq == Seq("name", "score"))
       assert(tableStatsCols(spark, p).isEmpty)
       // and an append to a stats table still inherits the contract
-      val p2 = new java.io.File(stage, "t2").getAbsolutePath
+      val p2 = s"$dir/t2"
       Seq((1L, "a")).toDF("k", "v")
         .write.format("graft.sources.SnapshotSource")
         .option("statsCols", "k").mode("overwrite").save(p2)
       Seq((2L, "b")).toDF("k", "v")
         .write.format("graft.sources.SnapshotSource").mode("append").save(p2)
       assert(tableStatsCols(spark, p2) == Seq("k"))
-    } finally rm(stage)
+    }
   }
 
   test("delete across schema generations keeps evolved columns; no-op returns the head") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_delsv_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_delsv_") { p =>
       snapshotWrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), p,
         nFiles = 1, statsCols = Seq("k"))
       // evolution append: a later batch carries an ADDED column
@@ -535,13 +496,12 @@ class Round10bSpec extends SparkSpec {
       val head = snapshotVersions(spark, p).last
       assert(snapshotDelete(spark, p, "k", 500L, 600L, nFiles = 1,
         asOf = Some(1L)) == head)
-    } finally rm(stage)
+    }
   }
 
   test("snapshot stream fromVersion skips the backfill") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_tailfrom_").toFile
-    try {
-      val p = new java.io.File(stage, "table").getAbsolutePath
+    withStage("graft_tailfrom_") { dir =>
+      val p = s"$dir/table"
       val ev = Tables.events(spark, sfDir)
       def third(r: Int) = ev.filter(col("event_id") % 3 === r)
       snapshotWrite(third(0), p, nFiles = 1, statsCols = Seq("event_id"))
@@ -555,6 +515,6 @@ class Round10bSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
       assert(spark.table(name).count() == third(1).count() + third(2).count(),
         "fromVersion=1 must stream exactly the rows landed after v1")
-    } finally rm(stage)
+    }
   }
 }

@@ -11,27 +11,15 @@ import graft.operators.SqlSurface
   * [[graft.plans.SnapshotDmlStrategy]]. */
 class Round10cSpec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
-  /** (absolute path, size) of every live data file — byte-identity
-    * evidence that a file was carried, not rewritten. */
-  private def dataFiles(stage: java.io.File): Set[(String, Long)] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.toSeq.flatMap(walk)
-      else Seq(f)
-    // catalog tables live at <root>/<name>/data
-    walk(new java.io.File(stage, "t/data")).filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getAbsolutePath, f.length())).toSet
-  }
+  /** (absolute path, size) of every live data file of the catalog
+    * table `t` under `p` — byte-identity evidence that a file was
+    * carried, not rewritten. */
+  private def dataFiles(p: String): Set[(String, Long)] =
+    parquetFiles(s"$p/t/data").map(f => (f, new java.io.File(f).length()))
 
   private def manifestFileSet(p: String, v: Long): Set[String] =
     snapshotManifest(spark, p, Some(v)).select("file").collect()
       .map(_.getString(0)).toSet
-
-  private def withTable[T](prefix: String)(body: (String, java.io.File) => T): T = {
-    val stage = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(stage.getAbsolutePath, stage) finally rm(stage)
-  }
 
   private def staged100(p: String): Unit = {
     import spark.implicits._
@@ -41,9 +29,9 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("SQL DELETE rewrites only stats-intersecting files; the rest carry byte-identical") {
-    withTable("graft_sqldml_") { (p, stage) =>
+    withStage("graft_sqldml_") { p =>
       staged100(p)
-      val before = dataFiles(stage)
+      val before = dataFiles(p)
       val mfBefore = manifestFileSet(s"$p/t", 1L)
       SqlSurface.withCatalog(spark, p) { cat =>
         spark.sql(s"DELETE FROM $cat.t WHERE k BETWEEN 10 AND 19")
@@ -56,7 +44,7 @@ class Round10cSpec extends SparkSpec {
       // copy-on-write: every pre-delete file survives untouched on disk
       // (v1 still references the rewritten one), and exactly ONE new
       // file landed — the touched file's residual rewrite
-      val after = dataFiles(stage)
+      val after = dataFiles(p)
       assert(before.subsetOf(after),
         "copy-on-write must never modify or remove existing files")
       assert((after -- before).size == 1,
@@ -68,7 +56,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("SQL DELETE/UPDATE with a provably-unmatched predicate commit no version") {
-    withTable("graft_sqldml_") { (p, _) =>
+    withStage("graft_sqldml_") { p =>
       staged100(p)
       SqlSurface.withCatalog(spark, p) { cat =>
         spark.sql(s"DELETE FROM $cat.t WHERE k > 5000")
@@ -80,7 +68,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("SQL UPDATE applies assignments only to matched rows and keeps column types") {
-    withTable("graft_sqldml_") { (p, _) =>
+    withStage("graft_sqldml_") { p =>
       staged100(p)
       SqlSurface.withCatalog(spark, p) { cat =>
         spark.sql(s"UPDATE $cat.t SET v = v * 2, s = concat(s, '!') WHERE k >= 90")
@@ -95,10 +83,10 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("SQL MERGE prunes to source-key files, carries the rest, clusters the rewrite") {
-    withTable("graft_sqldml_") { (p, stage) =>
+    withStage("graft_sqldml_") { p =>
       import spark.implicits._
       staged100(p)
-      val before = dataFiles(stage)
+      val before = dataFiles(p)
       val mfBefore = manifestFileSet(s"$p/t", 1L)
       Seq((15L, 1500.0), (17L, 1700.0)).toDF("k", "nv")
         .createOrReplaceTempView("chg10c")
@@ -110,7 +98,7 @@ class Round10cSpec extends SparkSpec {
       val mfAfter = manifestFileSet(s"$p/t", 2L)
       assert((mfBefore intersect mfAfter).size == 3,
         "only the file holding keys 15/17 may be rewritten")
-      val after = dataFiles(stage)
+      val after = dataFiles(p)
       assert(before.subsetOf(after) && (after -- before).size == 1,
         "merge must land exactly one rewritten file and touch nothing else")
       val t = readSnapshot(spark, s"$p/t")
@@ -120,7 +108,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("SQL MERGE throws on cardinality violation without committing") {
-    withTable("graft_sqldml_") { (p, _) =>
+    withStage("graft_sqldml_") { p =>
       import spark.implicits._
       staged100(p)
       Seq((15L, "a"), (15L, "b")).toDF("k", "s2")
@@ -139,7 +127,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("SQL MERGE NOT MATCHED BY SOURCE clause rewrites unreferenced rows") {
-    withTable("graft_sqldml_") { (p, _) =>
+    withStage("graft_sqldml_") { p =>
       import spark.implicits._
       staged100(p)
       Seq((15L, 1500.0)).toDF("k", "nv").createOrReplaceTempView("nmbs10c")
@@ -156,7 +144,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("partition-equality SQL DELETE on a partitioned table is metadata-only") {
-    withTable("graft_sqldml_") { (p, stage) =>
+    withStage("graft_sqldml_") { p =>
       import spark.implicits._
       val t = s"$p/t"
       def day(d: Int) = (1L to 10L).map(k => (d, d * 100L + k, k * 1.0))
@@ -164,11 +152,11 @@ class Round10cSpec extends SparkSpec {
       snapshotOverwritePartition(day(1), t, "day", "1", nFiles = 1)
       snapshotOverwritePartition(day(2), t, "day", "2", nFiles = 1)
       snapshotOverwritePartition(day(3), t, "day", "3", nFiles = 1)
-      val before = dataFiles(stage)
+      val before = dataFiles(p)
       SqlSurface.withCatalog(spark, p) { cat =>
         spark.sql(s"DELETE FROM $cat.t WHERE day = 2")
       }
-      assert(dataFiles(stage) == before,
+      assert(dataFiles(p) == before,
         "partition drop must write and delete nothing (metadata-only)")
       val head = readSnapshot(spark, t)
       assert(head.count() == 20)
@@ -184,7 +172,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("DML refuses time-travel targets and subquery predicates") {
-    withTable("graft_sqldml_") { (p, _) =>
+    withStage("graft_sqldml_") { p =>
       staged100(p)
       SqlSurface.withCatalog(spark, p) { cat =>
         spark.sql(s"DELETE FROM $cat.t WHERE k = 1") // head moves to v2
@@ -218,7 +206,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("a failing CTAS body commits nothing; a successful replace keeps history") {
-    withTable("graft_sqlctas_") { (p, _) =>
+    withStage("graft_sqlctas_") { p =>
       import spark.implicits._
       (1L to 10L).map(k => (k, k * 1.0)).toDF("k", "v")
         .createOrReplaceTempView("src10c")
@@ -299,7 +287,7 @@ class Round10cSpec extends SparkSpec {
     assert(GraftSqlParser.maintenancePlan("DESCRIBE TABLE t").isEmpty)
     assert(spark.sql("SELECT 1 + 1").head.getInt(0) == 2)
 
-    withTable("graft_sqlmaint_") { (p, stage) =>
+    withStage("graft_sqlmaint_") { p =>
       staged100(p)
       SqlSurface.withCatalog(spark, p) { cat =>
         spark.sql(s"DELETE FROM $cat.t WHERE k BETWEEN 10 AND 19") // v2
@@ -314,10 +302,10 @@ class Round10cSpec extends SparkSpec {
         assert(hist.columns.toSeq ==
           Seq("version", "committed_at", "n_files", "n_rows", "n_added_files", "max_batch_id"))
         assert(hist.select("version").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L))
-        val filesBefore = dataFiles(stage).size
+        val filesBefore = dataFiles(p).size
         val vac = spark.sql(s"VACUUM $cat.t KEEP 1 VERSIONS").head
         assert(vac.getLong(0) == 3L, "three versions expired")
-        assert(dataFiles(stage).size < filesBefore, "vacuum must reclaim files")
+        assert(dataFiles(p).size < filesBefore, "vacuum must reclaim files")
         assert(readSnapshot(spark, s"$p/t").count() == 100, "head survives vacuum")
         // an unregistered catalog DELEGATES to Spark's parser (other
         // extensions' identical verbs must stay reachable) — Spark then
@@ -349,7 +337,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("MERGE star actions and TRUNCATE TABLE work through the catalog") {
-    withTable("graft_sqlstar_") { (p, _) =>
+    withStage("graft_sqlstar_") { p =>
       import spark.implicits._
       staged100(p)
       Seq((5L, "up5", 500.0), (200L, "new", 2000.0)).toDF("k", "s", "v")
@@ -376,7 +364,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("schema sidecar: evolution visible in SQL, carried by every commit kind") {
-    withTable("graft_sqlevo_") { (p, _) =>
+    withStage("graft_sqlevo_") { p =>
       import spark.implicits._
       val t = s"$p/t"
       snapshotWrite((1L to 50L).map(k => (k, k * 1.0)).toDF("k", "v"),
@@ -408,7 +396,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("DML, MERGE, and TRUNCATE operate on the evolved table schema") {
-    withTable("graft_sqlevo2_") { (p, _) =>
+    withStage("graft_sqlevo2_") { p =>
       import spark.implicits._
       val t = s"$p/t"
       snapshotWrite((1L to 50L).map(k => (k, k * 1.0)).toDF("k", "v"),
@@ -447,7 +435,7 @@ class Round10cSpec extends SparkSpec {
       .map(_.toString).mkString(s"\nlayout of $t:\n  ", "\n  ", "")
 
   test("OPTIMIZE ZORDER BY: deterministic layout, exact stats, pruning on BOTH columns") {
-    withTable("graft_sqlzo_") { (p, _) =>
+    withStage("graft_sqlzo_") { p =>
       val t = s"$p/t"
       // 64k points on a 256x256 grid, x-sorted into 16 files
       val pts = spark.range(65536).select(
@@ -521,7 +509,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("ZORDER BY three columns: layout prunes on every axis") {
-    withTable("graft_sqlzo3_") { (p, _) =>
+    withStage("graft_sqlzo3_") { p =>
       val t = s"$p/t"
       // 32^3 points on a 32x32x32 grid, a-sorted: b and c ranges span
       // the full domain in every file before the z rewrite
@@ -562,7 +550,7 @@ class Round10cSpec extends SparkSpec {
   }
 
   test("DSv2 CDC options plan only the delta files, with pruning on the delta") {
-    withTable("graft_sqlcdc_") { (p, _) =>
+    withStage("graft_sqlcdc_") { p =>
       import spark.implicits._
       val t = s"$p/t"
       snapshotWrite((1L to 50L).map(k => (k, k * 1.0)).toDF("k", "v"),

@@ -26,13 +26,6 @@ import graft.operators.SqlSurface
   */
 class Round11Spec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
-  private def withStage[T](prefix: String)(body: String => T): T = {
-    val stage = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(stage.getAbsolutePath) finally rm(stage)
-  }
-
   // ───── 1. layout invariance ─────────────────────────────────────────
 
   /** Adversarial base frame: heavy duplicate keys (ties AT every
@@ -167,12 +160,12 @@ class Round11Spec extends SparkSpec {
             spark.sql("DESCRIBE HISTORY spark_catalog.db.t")
           })
           // a registered NON-snapshot catalog name is not ours either
-          spark.conf.set("spark.sql.catalog.jdbc_like",
-            "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
-          try assertDelegated(intercept[Exception] {
-            spark.sql("DESCRIBE HISTORY jdbc_like.db.t")
-          })
-          finally spark.conf.unset("spark.sql.catalog.jdbc_like")
+          CacheScope.withConf(spark, "spark.sql.catalog.jdbc_like" ->
+            "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog") {
+            assertDelegated(intercept[Exception] {
+              spark.sql("DESCRIBE HISTORY jdbc_like.db.t")
+            })
+          }
         } finally spark.catalog.setCurrentCatalog(prev)
       }
     }

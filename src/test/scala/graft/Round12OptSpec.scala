@@ -1,47 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** r12 optimization-round plan pins: the reshaped iteration/aggregation
-  * shapes must KEEP their cheaper structure (guide §2.4), or a later
-  * refactor silently re-introduces the per-iteration exchanges this
-  * round removed. Values are already pinned elsewhere (CausalGraphSpec's
-  * BigDecimal pagerank replay, the sb oracle, Round7Spec's BPE replay);
-  * these tests pin the SHAPE.
-  */
-class Round12OptSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4)
-  private val sfDir = "/root/testdata/sf0.001"
-
-  test("pagerank iterations are union+aggregate: no per-iteration sort-merge join, cached edges") {
-    val qe = Registry.byName("q_pagerank").fn(spark, sfDir).queryExecution
-    val plan = qe.executedPlan.toString
-    // the old shape carried a SortMergeJoin LeftOuter (nodes re-join) per
-    // iteration; the union-zero shape has none anywhere in the query
-    assert(!plan.contains("SortMergeJoin"),
-      "pagerank must not re-join nodes per iteration (union-zero shape)")
-    // edge list and node list are served from cache, never re-scanned
-    val cacheReads = plan.sliding("InMemoryTableScan".length)
-      .count(_ == "InMemoryTableScan")
-    assert(cacheReads >= 10, s"expected >=10 cached reads (edges+nodes per iteration), got $cacheReads")
-    CacheScope.releaseAll()
-  }
-
-  test("switchback pipeline evaluates the extract chain once: single fused aggregation, no cache, no join") {
-    val qe = Registry.byName("q_sb_pipeline").fn(spark, sfDir).queryExecution
-    val plan = qe.executedPlan.toString
-    // r13: metrics and the MWU rank table fused into ONE groupBy(test_name)
-    // after the window — events parquet is scanned exactly once, nothing is
-    // persisted (no cache lifecycle to manage), and the old metrics⋈pvals
-    // join is gone (the config dim's BroadcastNestedLoopJoin is the only
-    // join left)
-    def count(needle: String) = plan.sliding(needle.length).count(_ == needle)
-    assert(count("Scan parquet") == 1,
-      s"extract chain must run once: expected exactly 1 parquet scan, plan has ${count("Scan parquet")}")
-    assert(count("SortMergeJoin") == 0 && count("BroadcastHashJoin") == 0,
-      "the fused single-aggregation shape must not re-join metrics to pvals")
-    CacheScope.releaseAll()
-  }
+/** The narrowed money product: `decimal(10,2) × decimal(7,6)` sums
+  * exactly what the wide-decimal shape sums on 2-dp money data. */
+class Round12OptSpec extends SparkSpec {
 
   test("compact-precision money product keeps the sum exact vs the wide-decimal shape") {
     import org.apache.spark.sql.functions._

@@ -27,13 +27,6 @@ import graft.operators.{Invariants, Maintenance, SqlSurface, SnapshotTornWrite}
   */
 class Round12Spec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
-  private def withStage[T](prefix: String)(body: String => T): T = {
-    val stage = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(stage.getAbsolutePath) finally rm(stage)
-  }
-
   // ───── 1. deterministic staging layout ──────────────────────────────
 
   test("staging layout: long key — content exact, identical across runs, " +
@@ -184,7 +177,7 @@ class Round12Spec extends SparkSpec {
       val keep = half.limit((half.count() / 2).toInt)
       val tmpd = new java.io.File(s"$p/tamper_stage")
       keep.coalesce(1).write.parquet(tmpd.getAbsolutePath)
-      val part = tmpd.listFiles().find(_.getName.endsWith(".parquet")).get
+      val part = new java.io.File(parquetFiles(tmpd.getAbsolutePath).head)
       java.nio.file.Files.copy(part.toPath, victim.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       // drop the local FS's checksum sidecar: a checksummed store would

@@ -1,22 +1,17 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** r13 optimization-round pins.
+/** The size-gated co-partition shaper (`Adaptive.copartitionByKey`) and
+  * the money-cast bound.
   *
-  *  - The size-gated co-partition shaper (Adaptive.copartitionByKey)
-  *    must be RESULT-INVARIANT across both branches: the gated-off
-  *    branch (small frames keep their natural partitioning) and the
-  *    r12 always-repartition branch (minBytes=0) are the same query.
-  *  - The gate must actually disengage at test scale (the r12 verdict's
-  *    measured cost: 32-task stages over KB-sized iteration caches) and
-  *    engage when the threshold is forced low (the 100 TB shape).
-  *  - dedup_minhash keeps its two caches with ONE materialization job
-  *    (cand is populated transitively by the candShingles job).
+  *  - Both gate branches are the same query: the gated-off branch
+  *    (small frames keep their natural partitioning) and the
+  *    always-repartition branch (minBytes=0) give the same rows.
+  *  - The gate disengages at test scale (a repartition would run
+  *    many-task stages over KB-sized iteration caches), engages when the
+  *    threshold is forced low, and refuses a malformed threshold.
   */
-class Round13OptSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4)
-  private val sfDir = "/root/testdata/sf0.001"
+class Round13OptSpec extends SparkSpec {
+  private val minBytes = "spark.graft.copartition.minBytes"
 
   private def rows(name: String): Seq[String] = {
     val out = Registry.byName(name).fn(spark, sfDir)
@@ -30,10 +25,8 @@ class Round13OptSpec extends AnyFunSuite {
     // their hash(src) layout from rawEdges' keyed distinct (ungated) —
     // included anyway as layout-invariance checks
     for (q <- Seq("q_pagerank", "q_dedup_clusters", "q_lpa", "q_khop")) {
-      spark.conf.set("spark.graft.copartition.minBytes", "0") // r12: always repartition
-      val always = rows(q)
-      spark.conf.unset("spark.graft.copartition.minBytes")    // r13 default: gated
-      val gated = rows(q)
+      val always = CacheScope.withConf(spark, minBytes -> "0")(rows(q)) // always repartition
+      val gated = rows(q) // default: gated
       assert(always == gated, s"$q must not change under the co-partition gate")
     }
   }
@@ -46,21 +39,16 @@ class Round13OptSpec extends AnyFunSuite {
       .analyzed.toString == df.queryExecution.analyzed.toString,
       "below the threshold the frame must pass through unshaped")
     // forced-low threshold: hash(k) repartition present (the r12 shape)
-    spark.conf.set("spark.graft.copartition.minBytes", "1")
-    try {
+    CacheScope.withConf(spark, minBytes -> "1") {
       val shaped = graft.operators.Adaptive.copartitionByKey(df, col("k"))
       assert(shaped.queryExecution.analyzed.toString.contains("RepartitionByExpression"),
-        "above the threshold the r12 repartition(key) shape must engage")
-    } finally spark.conf.unset("spark.graft.copartition.minBytes")
+        "above the threshold the repartition(key) shape must engage")
+    }
     // a malformed threshold fails loudly, naming the key and the value
-    for (bad <- Seq("64MB", "-1")) {
-      spark.conf.set("spark.graft.copartition.minBytes", bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          graft.operators.Adaptive.copartitionByKey(df, col("k")))
-        assert(e.getMessage.contains("spark.graft.copartition.minBytes") &&
-          e.getMessage.contains(bad), e.getMessage)
-      } finally spark.conf.unset("spark.graft.copartition.minBytes")
+    for (bad <- Seq("64MB", "-1")) CacheScope.withConf(spark, minBytes -> bad) {
+      val e = intercept[IllegalArgumentException](
+        graft.operators.Adaptive.copartitionByKey(df, col("k")))
+      assert(e.getMessage.contains(minBytes) && e.getMessage.contains(bad), e.getMessage)
     }
   }
 
@@ -76,15 +64,5 @@ class Round13OptSpec extends AnyFunSuite {
         .agg(max(abs(col("l_extendedprice"))).cast("double")).head().getDouble(0)
       assert(mx < 1e8, s"$sf: l_extendedprice $mx would overflow decimal(10,2)")
     }
-  }
-
-  test("dedup_minhash serves the verify joins from caches without a separate cand job") {
-    val qe = Registry.byName("q_dedup_minhash").fn(spark, sfDir).queryExecution
-    val plan = qe.executedPlan.toString
-    val cacheReads = plan.sliding("InMemoryTableScan".length)
-      .count(_ == "InMemoryTableScan")
-    assert(cacheReads >= 3,
-      s"cand + both candShingles sides must read caches, got $cacheReads cache reads")
-    CacheScope.releaseAll()
   }
 }

@@ -7,16 +7,6 @@ package graft
   * perplexity-band filter (Corpus.scala). */
 class Round6Spec extends SparkSpec {
 
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-
-  private def lcg(k: Long, salt: Long): Long = {
-    val s1 = ((k % 2147483648L) * 1103515245L + (12345L + salt * 1013904223L)) % 2147483648L
-    (s1 * 1103515245L + 12345L) % 2147483648L
-  }
-
   test("uniform sample: bottom-k aggregate equals a plain-Scala replay, no window in the plan") {
     val docs = Tables.documents(spark, sfDir)
       .select("source", "doc_id").collect()

@@ -10,13 +10,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (Switchback.scala) and capped multi-seed BFS (Graph.scala). */
 class Round6bSpec extends SparkSpec {
 
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-  private def bd6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   test("semdedup: planted copies are dropped, cluster accounting is consistent") {
     val out = Registry.byName("q_semdedup").fn(spark, sfDir).collect()
     val emb = Tables.embeddings(spark, sfDir)

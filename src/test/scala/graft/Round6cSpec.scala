@@ -10,13 +10,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (Causal.scala). */
 class Round6cSpec extends SparkSpec {
 
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-  private def bd6(x: Double): BigDecimal =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   test("ann_pq matches a plain-Scala product-quantization replay") {
     val M = 8; val dsub = 8; val K = 4
     val emb = Tables.embeddings(spark, sfDir)

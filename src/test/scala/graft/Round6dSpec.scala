@@ -9,11 +9,6 @@ import org.apache.commons.math3.distribution.TDistribution
   * over the enriched doc-link graph (Graph.scala). */
 class Round6dSpec extends SparkSpec {
 
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-
   // classic O(len²) DP edit distance, written independently of any engine
   private def lev(a: String, b: String): Int = {
     val d = Array.ofDim[Int](a.length + 1, b.length + 1)
@@ -54,8 +49,6 @@ class Round6dSpec extends SparkSpec {
       val clusters = evs.groupBy(_._3).values.toSeq
       val g = clusters.size.toLong
       val n = evs.length.toLong
-      def dsum(xs: Seq[Double]): Double =
-        xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
       val clMoms = clusters.map { c =>
         val m = c.length.toLong
         val s = dsum(c.map(_._2))
@@ -127,8 +120,6 @@ class Round6dSpec extends SparkSpec {
     val got = Registry.byName("q_tost").fn(spark, sfDir).collect()
       .map(r => r.getString(0) -> r).toMap
     rows.groupBy(_._1).foreach { case (et, evs) =>
-      def dsum(xs: Seq[Double]): Double =
-        xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
       val on = evs.filter(_._3 == "On").map(_._2)
       val off = evs.filter(_._3 == "Off").map(_._2)
       val n1 = on.size.toDouble; val n2 = off.size.toDouble

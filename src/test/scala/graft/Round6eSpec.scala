@@ -6,21 +6,6 @@ package graft
   * the negative-sampling table (Corpus.scala). */
 class Round6eSpec extends SparkSpec {
 
-  private def r2d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e2 + 0.5) / 1e2
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-  private def dsum(xs: Seq[Double]): Double =
-    xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
-
-  // the portable two-round LCG (the q_permutation recipe)
-  private def lcg(key: Long, salt: Long): Long = {
-    val s1 = ((key % 2147483648L) * 1103515245L + (12345L + salt * 1013904223L)) % 2147483648L
-    (s1 * 1103515245L + 12345L) % 2147483648L
-  }
-
   test("shard assignment matches an LCG replay and populates every shard") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "n_chars").collect()
       .map(r => (r.getLong(0), r.getLong(1)))

@@ -5,13 +5,6 @@ package graft
   * sigmoid scoring → decile binning → ECE). */
 class Round6fSpec extends SparkSpec {
 
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-  private def dsum(xs: Seq[Double]): Double =
-    xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
-
   test("calibration matches an independent GD + binning replay; ECE law holds") {
     val stop = Set("the", "a", "of", "and", "is")
     val feats = Tables.documents(spark, sfDir).select("text").collect().map { r =>

@@ -7,13 +7,6 @@ import org.apache.spark.sql.functions._
   * conf/acc and the ECE weighting untested against anything). */
 class Round7Spec extends SparkSpec {
 
-  private def r4d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-  private def r6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-  private def dsum(xs: Seq[Double]): Double =
-    xs.map(x => BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
-
   test("calibrationFrom exercises multiple decile bins: ordering, per-bin conf/acc, ECE weighting") {
     import spark.implicits._
     // scores sigmoid(5·x1) span 7 distinct deciles; y mixes 0/1 within bins
@@ -175,20 +168,20 @@ class Round7Spec extends SparkSpec {
     }
     val ccLocal = ccRun()
     val prLocal = prRun()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    spark.conf.set("spark.graft.checkpointDir", dir.getAbsolutePath)
-    try {
-      assert(ccRun() === ccLocal, "CC identical under reliable checkpointing")
-      assert(prRun() === prLocal, "pagerank identical under reliable checkpointing")
-    } finally spark.conf.unset("spark.graft.checkpointDir")
-    // retirement must have deleted every generation's files — at most
-    // empty rdd-*/app dirs may remain
-    val leftover = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(dir).filter(_.getName.startsWith("part-"))
+    withStage("graft-ckpt") { dir =>
+      CacheScope.withConf(spark, "spark.graft.checkpointDir" -> dir) {
+        assert(ccRun() === ccLocal, "CC identical under reliable checkpointing")
+        assert(prRun() === prLocal, "pagerank identical under reliable checkpointing")
+      }
+      // retirement must have deleted every generation's files — at most
+      // empty rdd-*/app dirs may remain
+      val leftover = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        walk(new java.io.File(dir)).filter(_.getName.startsWith("part-"))
+      }
+      assert(leftover.isEmpty, s"checkpoint data files not retired: $leftover")
     }
-    assert(leftover.isEmpty, s"checkpoint data files not retired: $leftover")
   }
 
   test("eventsRange pushes the raw int64 ts bound to the parquet scan") {
@@ -206,10 +199,11 @@ class Round7Spec extends SparkSpec {
   }
 
   test("file-source replay (real readStream, no driver feed) equals the MemoryStream replay") {
-    val viaFiles = streaming.Replay.replayViaFiles(spark, sfDir)(ds =>
+    val viaFiles = try streaming.Replay.replayViaFiles(spark, sfDir)(ds =>
       streaming.EventStream.tumblingCounts(ds.toDF()))
       .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
         r.getLong(2), r.getDouble(3))).toSet
+      finally CacheScope.releaseAll() // deletes the staged feed
     val viaMemory = streaming.Replay.replay(spark, sfDir)(ds =>
       streaming.EventStream.tumblingCounts(ds.toDF()))
       .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
@@ -227,39 +221,35 @@ class Round7Spec extends SparkSpec {
       streaming.Event(i.toLong, ts(i.toLong), i % 5L,
         if (i % 2 == 0) "click" else "view", (i % 13).toDouble)
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_sink_").toFile
-    val (out, cp) = (new java.io.File(root, "out"), new java.io.File(root, "cp"))
-    val input = MemoryStream[streaming.Event]
-    def startQuery() = streaming.EventStream.exactlyOnceParquetSink(
-      streaming.EventStream.tumblingCounts(input.toDF()),
-      out.getAbsolutePath, cp.getAbsolutePath)
+    withStage("graft_sink_") { root =>
+      val input = MemoryStream[streaming.Event]
+      def startQuery() = streaming.EventStream.exactlyOnceParquetSink(
+        streaming.EventStream.tumblingCounts(input.toDF()),
+        s"$root/out", s"$root/cp")
 
-    val q1 = startQuery()
-    input.addData(events.take(200)); q1.processAllAvailable()
-    input.addData(events.slice(200, 400)); q1.processAllAvailable()
-    q1.stop() // crash/redeploy: the NEXT query resumes from the checkpoint
-    val q2 = startQuery()
-    input.addData(events.drop(400))
-    input.addData(streaming.Event(9999L, ts(100000L), 0L, "sentinel", 0.0)) // finalize all
-    q2.processAllAvailable(); q2.stop()
+      val q1 = startQuery()
+      input.addData(events.take(200)); q1.processAllAvailable()
+      input.addData(events.slice(200, 400)); q1.processAllAvailable()
+      q1.stop() // crash/redeploy: the NEXT query resumes from the checkpoint
+      val q2 = startQuery()
+      input.addData(events.drop(400))
+      input.addData(streaming.Event(9999L, ts(100000L), 0L, "sentinel", 0.0)) // finalize all
+      q2.processAllAvailable(); q2.stop()
 
-    val landed = spark.read.parquet(out.getAbsolutePath)
-      .select("window_start", "event_type", "n", "sum_value")
-      .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
-        r.getLong(2), r.getDouble(3))).toSeq
-    // no window lands twice, whatever batches were replayed on restart
-    assert(landed.size === landed.toSet.size, "duplicate finalized windows")
-    val batch = events.toDF()
-      .groupBy(window($"ts", "1 hour"), $"event_type")
-      .agg(count(lit(1)).as("n"), functions.Compat.sumMoney($"value").as("sum_value"))
-      .select($"window.start", $"event_type", $"n", $"sum_value")
-      .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
-        r.getLong(2), r.getDouble(3))).toSet
-    assert(landed.toSet === batch, "landed dataset must equal the batch twin")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+      val landed = spark.read.parquet(s"$root/out")
+        .select("window_start", "event_type", "n", "sum_value")
+        .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
+          r.getLong(2), r.getDouble(3))).toSeq
+      // no window lands twice, whatever batches were replayed on restart
+      assert(landed.size === landed.toSet.size, "duplicate finalized windows")
+      val batch = events.toDF()
+        .groupBy(window($"ts", "1 hour"), $"event_type")
+        .agg(count(lit(1)).as("n"), functions.Compat.sumMoney($"value").as("sum_value"))
+        .select($"window.start", $"event_type", $"n", $"sum_value")
+        .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
+          r.getLong(2), r.getDouble(3))).toSet
+      assert(landed.toSet === batch, "landed dataset must equal the batch twin")
     }
-    rm(root)
   }
 
   test("streaming replay harness: double-delivered batches dedup to the unique event set") {

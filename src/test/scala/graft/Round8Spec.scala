@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.{DailyPipeline, Similarity}
@@ -11,13 +10,7 @@ import graft.operators.{DailyPipeline, Similarity}
   * the SQL-surface size-literal validation. */
 class Round8Spec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
   test("stateful sessionize resumes from its checkpoint identically after a restart (RocksDB)") {
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
@@ -33,14 +26,13 @@ class Round8Spec extends SparkSpec {
     val ordered = all.sortBy(e => (e.ts.getTime, e.event_id))
     val (pre, post) = ordered.partition(_.ts.getTime <= ts(100).getTime)
     val sentinel = streaming.Event(-1L, ts(100000L), -1L, "sentinel", 0.0)
+    val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-    val root = java.nio.file.Files.createTempDirectory("graft_restart_").toFile
-    val (out, cp) = (new java.io.File(root, "out"), new java.io.File(root, "cp"))
-    try {
+    withStage("graft_restart_") { root => CacheScope.withConf(spark, rocksDb) {
       val input = MemoryStream[streaming.Event]
       def start() = streaming.EventStream.exactlyOnceParquetSink(
-        streaming.EventStream.sessionize(input.toDS()).toDF(),
-        out.getAbsolutePath, cp.getAbsolutePath)
+        streaming.EventStream.sessionize(input.toDS()).toDF(), s"$root/out", s"$root/cp")
       val q1 = start()
       val (pre1, pre2) = pre.splitAt(pre.size / 2)
       input.addData(pre1); q1.processAllAvailable()
@@ -50,7 +42,7 @@ class Round8Spec extends SparkSpec {
       input.addData(post); q2.processAllAvailable()
       input.addData(Seq(sentinel)); q2.processAllAvailable()
       q2.stop()
-      val landed = spark.read.parquet(out.getAbsolutePath)
+      val landed = spark.read.parquet(s"$root/out")
         .select("user_id", "session_start", "session_end", "n_events")
         .collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime,
           r.getTimestamp(2).getTime, r.getLong(3))).toSet
@@ -80,10 +72,7 @@ class Round8Spec extends SparkSpec {
           s.head._4 == 21L, s"user $u session must span the restart: ${s.head}")
       }
       assert(landed.count(_._1 == 4L) === 2, "user 4's gap still splits sessions")
-    } finally {
-      prev.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
-      rm(root)
-    }
+    }}
   }
 
   test("cumulative msprt monitor resumes from its checkpoint after a restart") {
@@ -150,10 +139,9 @@ class Round8Spec extends SparkSpec {
     val trained = Similarity.IvfPqIndex(
       Similarity.trainIvf(emb, k = 8, iters = 2),
       Similarity.trainPq(emb, M = 8, dsub = 8, K = 4))
-    val stage = java.nio.file.Files.createTempDirectory("graft_ann_idx_").toFile
-    try {
-      Similarity.writeIvfPqIndex(spark, stage.getAbsolutePath, trained)
-      val loaded = Similarity.readIvfPqIndex(spark, stage.getAbsolutePath)
+    withStage("graft_ann_idx_") { dir =>
+      Similarity.writeIvfPqIndex(spark, dir, trained)
+      val loaded = Similarity.readIvfPqIndex(spark, dir)
       // doubles round-trip parquet bit-exactly
       assert(loaded.centroids.map(_.toSeq).toSeq === trained.centroids.map(_.toSeq).toSeq)
       assert(loaded.codebook.map(_.map(_.toSeq).toSeq).toSeq ===
@@ -162,19 +150,8 @@ class Round8Spec extends SparkSpec {
       // the serve audit: with artifacts in hand, BUILDING the search
       // plan must launch zero Spark jobs (no Lloyd rounds, no collect —
       // everything is broadcast literals over a lazy scan)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val served =
-        try {
-          val df = Similarity.ivfPqSearchWith(loaded, emb, col("vec_id") < 10)
-          Thread.sleep(1500) // listener bus drain
-          assert(jobs.get() === 0,
-            s"serve-plan build launched ${jobs.get()} jobs — it must train nothing")
-          df
-        } finally spark.sparkContext.removeSparkListener(listener)
+      val (served, jobs) = jobsDuring(Similarity.ivfPqSearchWith(loaded, emb, col("vec_id") < 10))
+      assert(jobs === 0, s"serve-plan build launched $jobs jobs — it must train nothing")
 
       // serving from reloaded artifacts ≡ the composed train+search query
       val composed = Similarity.ivfPqSearch(emb, col("vec_id") < 10)
@@ -183,23 +160,22 @@ class Round8Spec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
       assert(viaArtifacts === composed)
       assert(viaArtifacts.nonEmpty)
-    } finally rm(stage)
+    }
   }
 
   test("daily pipeline: re-running a day leaves the results table unchanged") {
-    val base = java.nio.file.Files.createTempDirectory("graft_daily_spec_").toFile
-    try {
+    withStage("graft_daily_spec_") { dir =>
       val days = Seq("2024-01-10", "2024-01-11", "2024-01-12")
         .map(java.time.LocalDate.parse)
-      days.foreach(d => DailyPipeline.landDay(spark, sfDir, base.getAbsolutePath, d))
-      def snapshot() = DailyPipeline.resultsTable(spark, base.getAbsolutePath)
+      days.foreach(d => DailyPipeline.landDay(spark, sfDir, dir, d))
+      def snapshot() = DailyPipeline.resultsTable(spark, dir)
         .collect().map(_.toSeq).toSet
       val before = snapshot()
       assert(before.nonEmpty)
-      DailyPipeline.landDay(spark, sfDir, base.getAbsolutePath,
+      DailyPipeline.landDay(spark, sfDir, dir,
         java.time.LocalDate.parse("2024-01-11"))
       assert(snapshot() === before, "day re-run must be a byte-identical replace")
-    } finally rm(base)
+    }
   }
 
   test("bucket-grouped candidate generation equals the band self-join on random band tables") {
@@ -410,21 +386,18 @@ class Round8Spec extends SparkSpec {
 
   test("compaction bin-packs fragments losslessly with disjoint key ranges per file") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_compact_spec_").toFile
-    try {
-      val frag = new java.io.File(stage, "frag").getAbsolutePath
-      val packed = new java.io.File(stage, "packed").getAbsolutePath
+    withStage("graft_compact_spec_") { dir =>
+      val frag = s"$dir/frag"
+      val packed = s"$dir/packed"
       val data = (0L until 4000L).map(i => (i, s"row_$i", i % 7))
       data.toDF("k", "payload", "grp").repartition(50)
         .write.mode("overwrite").parquet(frag)
-      def files(p: String) = new java.io.File(p).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-      assert(files(frag).length == 50)
+      assert(parquetFiles(frag).size == 50)
       // target sized to land a handful of output files
-      val totalBytes = files(frag).map(_.length).sum
+      val totalBytes = parquetFiles(frag).toSeq.map(new java.io.File(_).length).sum
       val nFiles = operators.Maintenance.compactParquet(
         spark, frag, packed, targetBytes = totalBytes / 4 + 1, clusterBy = Some("k"))
-      assert(nFiles == files(packed).length.toLong)
+      assert(nFiles == parquetFiles(packed).size.toLong)
       assert(nFiles >= 2 && nFiles <= 8, s"got $nFiles files")
       // lossless: exact multiset of rows survives
       val back = spark.read.parquet(packed)
@@ -432,33 +405,30 @@ class Round8Spec extends SparkSpec {
       assert(back.toSeq === data.sorted)
       // clustered: each file covers a disjoint k range (what parquet
       // min/max footers prune on)
-      val ranges = files(packed).map { f =>
-        val r = spark.read.parquet(f.getAbsolutePath)
-          .agg(min("k"), max("k")).collect()(0)
+      val ranges = parquetFiles(packed).toSeq.map { f =>
+        val r = spark.read.parquet(f).agg(min("k"), max("k")).collect()(0)
         (r.getLong(0), r.getLong(1))
       }.sortBy(_._1)
       ranges.sliding(2).foreach {
-        case Array((_, hi), (lo2, _)) => assert(hi < lo2, s"overlap: $ranges")
+        case Seq((_, hi), (lo2, _)) => assert(hi < lo2, s"overlap: $ranges")
         case _ => ()
       }
-    } finally rm(stage)
+    }
   }
 
   test("compaction is lossless across the target-size envelope") {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_compact_env_").toFile
-    try {
-      val frag = new java.io.File(stage, "frag").getAbsolutePath
+    withStage("graft_compact_env_") { dir =>
+      val frag = s"$dir/frag"
       val data = (0L until 1000L).map(i => (i, s"v$i"))
       data.toDF("k", "v").repartition(20).write.mode("overwrite").parquet(frag)
-      val totalBytes = new java.io.File(frag).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      val totalBytes = parquetFiles(frag).toSeq.map(new java.io.File(_).length).sum
       // targets spanning: far above total (→ exactly 1 file), near
       // total, a fraction, and pathologically tiny (→ many files, but
       // never more than the row count can fill and never an error)
       Seq(totalBytes * 10, totalBytes + 1, totalBytes / 7 + 1, 64L)
         .zipWithIndex.foreach { case (target, i) =>
-          val out = new java.io.File(stage, s"out$i").getAbsolutePath
+          val out = s"$dir/out$i"
           val n = operators.Maintenance.compactParquet(
             spark, frag, out, targetBytes = target, clusterBy = Some("k"))
           if (target > totalBytes) assert(n === 1L, s"target=$target")
@@ -467,25 +437,28 @@ class Round8Spec extends SparkSpec {
             .collect().map(r => (r.getLong(0), r.getString(1))).sorted
           assert(back.toSeq === data, s"target=$target lost rows")
         }
-    } finally rm(stage)
+    }
   }
 
   test("file replay dupFeed: every chunk delivered twice, dedup output unchanged") {
-    val once = streaming.Replay.replayViaFiles(spark, sfDir)(ds =>
-      streaming.EventStream.dedupStream(ds.toDF()).select("event_id"))
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val twice = streaming.Replay.replayViaFiles(spark, sfDir, dupFeed = true)(ds =>
-      streaming.EventStream.dedupStream(ds.toDF()).select("event_id"))
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(twice === once, "re-delivered chunk files must dedup away")
-    // and WITHOUT the dedup transform the duplicate files genuinely
-    // re-deliver every row — proving the harness exercises real
-    // at-least-once delivery, not a no-op copy
-    val raw = streaming.Replay.replayViaFiles(spark, sfDir, dupFeed = true)(ds =>
-      streaming.EventStream.tumblingCounts(ds.toDF()))
-    val rawN = raw.agg(sum("n")).head().getLong(0)
-    val baseN = Tables.events(spark, sfDir).count()
-    assert(rawN === 2 * baseN, s"expected every event twice, got $rawN of ${2 * baseN}")
+    // releaseAll (the runner contract) deletes each replay's staged feed
+    try {
+      val once = streaming.Replay.replayViaFiles(spark, sfDir)(ds =>
+        streaming.EventStream.dedupStream(ds.toDF()).select("event_id"))
+        .collect().map(_.getLong(0)).sorted.toSeq
+      val twice = streaming.Replay.replayViaFiles(spark, sfDir, dupFeed = true)(ds =>
+        streaming.EventStream.dedupStream(ds.toDF()).select("event_id"))
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(twice === once, "re-delivered chunk files must dedup away")
+      // and WITHOUT the dedup transform the duplicate files genuinely
+      // re-deliver every row — proving the harness exercises real
+      // at-least-once delivery, not a no-op copy
+      val raw = streaming.Replay.replayViaFiles(spark, sfDir, dupFeed = true)(ds =>
+        streaming.EventStream.tumblingCounts(ds.toDF()))
+      val rawN = raw.agg(sum("n")).head().getLong(0)
+      val baseN = Tables.events(spark, sfDir).count()
+      assert(rawN === 2 * baseN, s"expected every event twice, got $rawN of ${2 * baseN}")
+    } finally CacheScope.releaseAll()
   }
 
   test("SQL aggregate size literals are validated at registration") {

@@ -10,15 +10,6 @@ import graft.operators.Similarity
   * embeddings. */
 class Round9Spec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = sources.Sources.deleteRecursively(f)
-
-  private def parquetFiles(dir: java.io.File): Set[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.toSeq.flatMap(walk)
-      else Seq(f)
-    walk(dir).map(_.getAbsolutePath).filter(_.endsWith(".parquet")).toSet
-  }
-
   /** Train the gate-shaped index (k=8 IVF / M=8×K=4 PQ, id-sliced
     * init) on `emb` and persist it under `path`. */
   private def buildIndex(path: String,
@@ -94,7 +85,7 @@ class Round9Spec extends SparkSpec {
       // day 0: the corpus WITHOUT the %10 slice; its twins find nothing
       Similarity.writeCodedCorpus(spark, stage.getAbsolutePath, index,
         base.filter(col("vec_id") % 10 =!= 0))
-      val files0 = parquetFiles(new java.io.File(stage, "coded"))
+      val files0 = parquetFiles(s"${stage.getPath}/coded")
       val twinRows = base.filter(col("vec_id") % 10 === 0).collect()
         .map(r => Row(r.getLong(0) + 1000000L, r.get(1)))
       val twins = spark.createDataFrame(
@@ -119,7 +110,7 @@ class Round9Spec extends SparkSpec {
           s"twin $q missed its appended original: ${after.get(q)}")
       }
       // append, not rewrite: every day-0 file is still on disk
-      val files1 = parquetFiles(new java.io.File(stage, "coded"))
+      val files1 = parquetFiles(s"${stage.getPath}/coded")
       assert(files0.subsetOf(files1),
         s"append rewrote day-0 files: ${files0 -- files1}")
     } finally { CacheScope.releaseAll(); rm(stage) }
@@ -144,7 +135,7 @@ class Round9Spec extends SparkSpec {
       val ev = Tables.events(spark, sfDir)
       Maintenance.writeSkipIndexed(ev, stage.getAbsolutePath,
         statsCols = Seq("event_id", "user_id"), nFiles = 16, clusterBy = "event_id")
-      val nData = parquetFiles(new java.io.File(stage, "data")).size
+      val nData = parquetFiles(s"${stage.getPath}/data").size
       assert(nData == 16, s"expected 16 staged files, got $nData")
       val pruned = Maintenance.prunedRead(spark, stage.getAbsolutePath,
         "event_id", 100L, 299L)
@@ -241,20 +232,18 @@ class Round9Spec extends SparkSpec {
 
   test("snapshots: append rewrites nothing, crash is invisible, vacuum GCs exactly the dead files") {
     import operators.Maintenance._
-    val stage = java.nio.file.Files.createTempDirectory("graft_snap_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_snap_") { p =>
       val ev = Tables.events(spark, sfDir)
       val even = ev.filter(col("event_id") % 2 === 0)
       val v1 = snapshotWrite(even, p, nFiles = 3)
       assert(v1 == 1L)
-      val filesAfterV1 = parquetFiles(new java.io.File(stage, "data"))
+      val filesAfterV1 = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       val v2 = snapshotAppend(ev.filter(col("event_id") % 2 === 1), p, nFiles = 3)
       assert(v2 == 2L)
       // append-not-rewrite: every v1 data file survives byte-for-byte
       // (same path, mtime, size) — the O(batch) commit claim
-      val after = parquetFiles(new java.io.File(stage, "data"))
+      val after = parquetFiles(s"$p/data")
         .map(f => (f, new java.io.File(f).lastModified, new java.io.File(f).length))
       assert(filesAfterV1.subsetOf(after), "append rewrote a v1 data file")
       // time travel: v1 still answers the pre-append table exactly
@@ -263,7 +252,7 @@ class Round9Spec extends SparkSpec {
 
       // crashed commit = data files landed, manifest rename never
       // happened: simulate by writing a batch dir with no version
-      val orphan = new java.io.File(stage, "data/bcrashed0000")
+      val orphan = new java.io.File(p, "data/bcrashed0000")
       even.limit(10).write.mode("overwrite").parquet(orphan.getAbsolutePath)
       assert(snapshotVersions(spark, p) == Seq(1L, 2L),
         "a crashed commit must not surface as a version")
@@ -272,7 +261,7 @@ class Round9Spec extends SparkSpec {
 
       // vacuum keep=1: v1's manifest goes; since v2 carries v1's files
       // forward, the only DEAD data files are the orphan batch's
-      val orphanFiles = parquetFiles(orphan)
+      val orphanFiles = parquetFiles(orphan.getPath)
       assert(orphanFiles.nonEmpty)
       // grace window: a vacuum racing an in-flight commit must not GC
       // its just-written (manifest-less) files — everything here is
@@ -299,14 +288,12 @@ class Round9Spec extends SparkSpec {
       val (e2, r2) = vacuumSnapshots(spark, p, keep = 1)
       assert(e2 == 1L && r2 > 0L, s"replace history not GC'd: ($e2, $r2)")
       assert(readSnapshot(spark, p).count() == 100L)
-    } finally rm(stage)
+    }
   }
 
   test("snapshot range read prunes files from the queried version's own manifest") {
     import operators.Maintenance._
-    val stage = java.nio.file.Files.createTempDirectory("graft_snapr_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_snapr_") { p =>
       val ev = Tables.events(spark, sfDir)
       val even = ev.filter(col("event_id") % 2 === 0)
       snapshotWrite(even, p, nFiles = 8,
@@ -321,7 +308,7 @@ class Round9Spec extends SparkSpec {
       val pruned = readSnapshotRange(spark, p, "event_id", 100L, 199L)
       val expect = ev.filter(col("event_id").between(100L, 199L)).count()
       assert(pruned.count() == expect)
-      val all = parquetFiles(new java.io.File(stage, "data"))
+      val all = parquetFiles(s"$p/data")
       assert(scannedFiles(pruned).size < all.size,
         s"range read scanned all ${all.size} files — no pruning happened")
       // historic version: same range over v1 sees only the even ids,
@@ -334,7 +321,7 @@ class Round9Spec extends SparkSpec {
       val none = readSnapshotRange(spark, p, "event_id", -500L, -1L)
       assert(none.count() == 0L)
       assert(none.schema == pruned.schema)
-    } finally rm(stage)
+    }
   }
 
   test("corpus pipeline plan: the crawl union and the digest aggregation appear exactly once") {
@@ -356,20 +343,18 @@ class Round9Spec extends SparkSpec {
   test("snapshot sink: re-delivered batch ids are skipped before any write; empty batches commit nothing") {
     import operators.Maintenance._
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_snapsink_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_snapsink_") { p =>
       def batch(ids: Long*) = ids.map(i => (i, s"v$i")).toDF("k", "v")
       snapshotSinkBatch(batch(1, 2), p, id = 0)
       snapshotSinkBatch(batch(3, 4), p, id = 1)
       assert(snapshotVersions(spark, p) == Seq(1L, 2L))
-      val before = parquetFiles(new java.io.File(stage, "data"))
+      val before = parquetFiles(s"$p/data")
       // at-least-once replay: the SAME id arrives again with different
       // content (a nondeterministic upstream recomputation) — the sink
       // must skip it entirely, leaving the table byte-identical
       snapshotSinkBatch(batch(99), p, id = 1)
       assert(snapshotVersions(spark, p) == Seq(1L, 2L), "replayed id committed")
-      assert(parquetFiles(new java.io.File(stage, "data")) == before,
+      assert(parquetFiles(s"$p/data") == before,
         "replayed id wrote data files")
       // empty batch: no version churn
       snapshotSinkBatch(batch().toDF("k", "v"), p, id = 2)
@@ -380,7 +365,7 @@ class Round9Spec extends SparkSpec {
       // time travel over the ingest history
       assert(readSnapshot(spark, p, Some(1L)).count() == 2L)
       assert(committedBatchIds(spark, p) == Set(0L, 1L, 3L))
-    } finally rm(stage)
+    }
   }
 
   test("streaming snapshot sink survives a stop/restart without duplicating a batch") {
@@ -394,8 +379,8 @@ class Round9Spec extends SparkSpec {
         if (i % 2 == 0) "click" else "view", (i % 13).toDouble)
     }
     val sentinel = streaming.Event(9999L, ts(100000L), 0L, "sentinel", 0.0)
-    val root = java.nio.file.Files.createTempDirectory("graft_snapsink2_").toFile
-    try {
+    withStage("graft_snapsink2_") { dir =>
+      val root = new java.io.File(dir)
       // interrupted run: stop mid-stream, restart from the checkpoint
       val (tbl, cp) = (new java.io.File(root, "tbl"), new java.io.File(root, "cp"))
       val in1 = MemoryStream[streaming.Event]
@@ -430,20 +415,18 @@ class Round9Spec extends SparkSpec {
       val ids = committedBatchIds(spark, tbl.getAbsolutePath)
       assert(ids.size == snapshotVersions(spark, tbl.getAbsolutePath).size,
         "a version landed without a fresh batch id")
-    } finally rm(root)
+    }
   }
 
   test("compaction is a replace version: reads equal, history intact, replay-skip survives") {
     import operators.Maintenance._
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_snapc_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_snapc_") { p =>
       def batch(lo: Long, hi: Long) = (lo to hi).map(i => (i, s"v$i")).toDF("k", "v")
       (0L to 3L).foreach(id => snapshotSinkBatch(batch(id * 10, id * 10 + 9), p, id))
       assert(snapshotVersions(spark, p).size == 4)
       val beforeRows = readSnapshot(spark, p).select("k").as[Long].collect().sorted
-      val beforeFiles = parquetFiles(new java.io.File(stage, "data")).size
+      val beforeFiles = parquetFiles(s"$p/data").size
       val v5 = compactSnapshot(spark, p, targetBytes = 1L << 30)
       assert(v5 == 5L)
       // head reads identically from fewer files; history is untouched
@@ -464,7 +447,7 @@ class Round9Spec extends SparkSpec {
       val (expired, removed) = vacuumSnapshots(spark, p, keep = 1)
       assert(expired == 5L && removed > 0L)
       assert(readSnapshot(spark, p).count() == 50L)
-    } finally rm(stage)
+    }
   }
 
   // file count of a version, via its manifest
@@ -474,9 +457,7 @@ class Round9Spec extends SparkSpec {
 
   test("snapshot append with an added column: old files read NULL, old versions unchanged") {
     import operators.Maintenance._
-    val stage = java.nio.file.Files.createTempDirectory("graft_snapev_").toFile
-    try {
-      val p = stage.getAbsolutePath
+    withStage("graft_snapev_") { p =>
       val docs = Tables.documents(spark, sfDir).select("doc_id", "source")
       val half = docs.filter(col("doc_id") % 2 === 0)
       snapshotWrite(half, p, nFiles = 2)
@@ -498,6 +479,6 @@ class Round9Spec extends SparkSpec {
       val v1 = readSnapshot(spark, p, Some(1L))
       assert(v1.columns.toSet == Set("doc_id", "source"))
       assert(v1.count() == half.count())
-    } finally rm(stage)
+    }
   }
 }

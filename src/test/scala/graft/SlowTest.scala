@@ -2,14 +2,17 @@ package graft
 
 import org.scalatest.Tag
 
-/** The SLOW test tier (r13, VERDICT item 2). The driver's verify window
-  * truncated the 33-minute full suite in r12, making a real failure
-  * indistinguishable from a timeout, so the default `sbt test` excludes
-  * tests tagged here (build.sbt adds `-l graft.Slow` unless
-  * GRAFT_SLOW_TESTS is set) and finishes in ~11 minutes with a real
-  * summary line. The tagged tests are full-registry sweeps whose value
-  * the driver's own Verify + DuckDB oracle gate already duplicates
-  * every round; they stay runnable:
+/** The slow test tier. The default `sbt test` excludes tests tagged
+  * here (build.sbt adds `-l graft.Slow` unless GRAFT_SLOW_TESTS is set),
+  * so it finishes in about ten minutes instead of over half an hour.
+  * The five tagged tests sweep the whole registry or a large replay,
+  * which a full `graft.Verify` + DuckDB oracle run also covers:
+  *
+  *  - OperatorsSpec: "every registered operator returns rows",
+  *    "every oracle-backed query is partitioning-invariant" and
+  *    "registry names are unique and oracle columns align";
+  *  - PowerSpec: "solve-n chain lands on 80% exact power";
+  *  - Round11Spec: "z layouts never change an answer".
   *
   *   GRAFT_SLOW_TESTS=1 sbt "testOnly -- -n graft.Slow"   // slow tier
   *   GRAFT_SLOW_TESTS=1 sbt test                          // everything

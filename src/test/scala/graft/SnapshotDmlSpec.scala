@@ -10,25 +10,6 @@ import graft.operators.SqlSurface
   * that sharing promises across the two surfaces. */
 class SnapshotDmlSpec extends SparkSpec {
 
-  private def withStage[T](prefix: String)(body: String => T): T = {
-    val stage = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(stage.getAbsolutePath) finally sources.Sources.deleteRecursively(stage)
-  }
-
-  private def dataFiles(table: String): Set[String] = {
-    val root = java.nio.file.Paths.get(table, "data")
-    val s = java.nio.file.Files.walk(root)
-    try {
-      val it = s.iterator()
-      var out = Set.empty[String]
-      while (it.hasNext) {
-        val f = it.next().toString
-        if (f.endsWith(".parquet")) out += f
-      }
-      out
-    } finally s.close()
-  }
-
   /** file → (n_rows, min_k, max_k) of one version's manifest. */
   private def fileStats(table: String, v: Long): Map[String, (Long, Long, Long)] =
     snapshotManifest(spark, table, Some(v))
@@ -89,14 +70,14 @@ class SnapshotDmlSpec extends SparkSpec {
         statsCols = Seq("k"))
       snapshotOverwritePartition(day("d2", 100L), t, "day", "d2", nFiles = 2,
         statsCols = Seq("k"))
-      val filesBefore = dataFiles(t)
+      val filesBefore = parquetFiles(s"$t/data")
       val changes = Seq((5L, "U", "d1", -1.0), (500L, "I", "d2", 1.0))
         .toDF("k", "op", "day", "v")
       val e = intercept[IllegalArgumentException] {
         snapshotMerge(spark, t, changes, "k", nFiles = 1)
       }
       assert(e.getMessage.contains("snapshotOverwritePartition"))
-      assert(dataFiles(t) == filesBefore, "the refused merge left a data file behind")
+      assert(parquetFiles(s"$t/data") == filesBefore, "the refused merge left a data file behind")
       assert(snapshotVersions(spark, t) == Seq(1L, 2L))
     }
   }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graftspec.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{DailyPipeline, Manifest}
@@ -18,27 +14,7 @@ import graft.operators.Maintenance._
   * commit and a read take. */
 class SnapshotMetaSpec extends SparkSpec {
 
-  private def withStage[T](prefix: String)(body: String => T): T = {
-    val stage = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(stage.getAbsolutePath) finally sources.Sources.deleteRecursively(stage)
-  }
-
   private def versionDir(p: String, v: Long) = f"$p/versions/v$v%05d"
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerDrain(spark.sparkContext)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   /** Every version of `p`: the manifest read on the driver equals
     * `spark.read.parquet` of the version dir — schema (nullability

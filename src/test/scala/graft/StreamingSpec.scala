@@ -308,18 +308,14 @@ class StreamingSpec extends SparkSpec {
     // every emitted pick matches a plain-Scala replay of the batch law
     // (same LCG salt-77 draw, same Efraimidis-Spirakis key, same
     // (ekey, id) tie-break) over its finalized window
-    def lcg(key: Long): Long = {
-      val s1 = ((key % 2147483648L) * 1103515245L + (12345L + 77L * 1013904223L)) % 2147483648L
-      (s1 * 1103515245L + 12345L) % 2147483648L
-    }
     val expected = (events :+ Event(999L, ts(20000L), 0L, "click", 0.0))
       .groupBy(e => (e.ts.getTime / 3600000L * 3600000L, e.event_type))
       .flatMap { case ((ws, et), es) =>
         es.map { e =>
-          val u = (lcg(e.event_id) + 1.0) / 2147483649.0
+          val u = (lcg(e.event_id, 77L) + 1.0) / 2147483649.0
           val raw = -math.log(u) / (math.max(e.value, 0.0) + 1.0)
           // same 1e-6 pre-selection rounding as the operator
-          (e.event_id, math.signum(raw) * math.floor(math.abs(raw) * 1e6 + 0.5) / 1e6)
+          (e.event_id, r6d(raw))
         }.sortBy { case (id, k) => (k, id) }.take(3).zipWithIndex
           .map { case ((id, _), i) => (ws, et, i + 1, id) }
       }.toSet
@@ -353,8 +349,6 @@ class StreamingSpec extends SparkSpec {
     val chopped = run(events.grouped(29).toSeq, "psi_b")
     assert(one === chopped, "PSI monitor must not depend on micro-batch chop")
     // plain-Scala replay of the PSI law per finalized day
-    def r6d(x: Double) = math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
-    def r4d(x: Double) = math.signum(x) * math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
     // the far-future probe's own window never finalizes, so the law
     // replays over the real two days only
     val expected = events
@@ -546,7 +540,7 @@ class StreamingSpec extends SparkSpec {
     val p1 = w._3.toDouble / w._2; val p2 = w._5.toDouble / w._4
     val pp = (w._3 + w._5).toDouble / (w._2 + w._4)
     val z = (p1 - p2) / math.sqrt(pp * (1 - pp) * (1.0 / w._2 + 1.0 / w._4))
-    assert(math.abs(w._6 - math.signum(z) * math.floor(math.abs(z) * 1e4 + 0.5) / 1e4) < 1e-9)
+    assert(math.abs(w._6 - r4d(z)) < 1e-9)
   }
 
   test("streaming MAD monitor is chop-invariant and flags only the shifted day") {
